@@ -102,6 +102,32 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str,
     return staged.select(F.col(id_col), F.explode(elems).alias("__s__"))
 
 
+def shingle_rows_sql(id_col: str, text_col: str, shingle_n: int | None,
+                     parallelism: int) -> str:
+    """:func:`shingle_table` as SQL over a ``{df}`` argument of
+    ``spark.sql``: the same plan, for callers that build a whole
+    statement on top of it in one py4j round trip instead of dozens
+    (test_index_matches_direct_pipeline pins the two as equal)."""
+    ident = f"`{id_col}`"
+    if shingle_n:
+        ln = f"size(__tk0__) - {shingle_n - 1}"
+        grams = f"slice(__tk0__, 1, {ln})"
+        for j in range(1, shingle_n):
+            grams = (f"zip_with({grams}, slice(__tk0__, {j + 1}, {ln}), "
+                     "(a, b) -> concat(a, ' ', b))")
+        elems = (f"array_distinct(CASE WHEN {ln} >= 1 THEN {grams} "
+                 "ELSE CAST(array() AS array<string>) END)")
+    else:
+        elems = "array_distinct(__tk0__)"
+    return (f"SELECT {ident}, explode({elems}) AS __s__ FROM ("
+            # the SQL literal '\\s+' (escaped for Python, then for SQL)
+            # is the regex \s+ that text.tokens splits on
+            f"SELECT {ident}, split(lower(trim(`{text_col}`)), '\\\\s+') "
+            "AS __tk0__ FROM ("
+            f"SELECT /*+ REPARTITION({int(parallelism)}, {ident}) */ * "
+            "FROM {df}))")
+
+
 def minhash_table(df: DataFrame, id_col: str, text_col: str,
                   n_hashes: int = 16, shingle_n: int = 3,
                   sh: DataFrame | None = None) -> DataFrame:
@@ -113,31 +139,31 @@ def minhash_table(df: DataFrame, id_col: str, text_col: str,
     """
     if sh is None:
         sh = shingle_table(df, id_col, text_col, shingle_n)
-    return sh.groupBy(id_col).agg(*[
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("__s__")))).alias(f"h{i}")
-        for i in range(n_hashes)
-    ])
+    return sh.groupBy(id_col).agg(*minhash_minima(n_hashes))
+
+
+def minhash_minima(n_hashes: int = 16) -> list[Column]:
+    """The n keyed-md5 minima over a shingle_table group: h0..h{n-1}.
+    SQL strings, one py4j round trip each: the Column-builder form cost
+    ~6 per hash, a plan-construction cost paid by every call."""
+    return [F.expr(e) for e in minhash_minima_sql(n_hashes)]
+
+
+def minhash_minima_sql(n_hashes: int = 16) -> list[str]:
+    return [f"min(md5(concat('{i}:', __s__))) AS h{i}"
+            for i in range(n_hashes)]
 
 
 def band_keys(n_hashes: int = 16, n_bands: int = 4) -> list[Column]:
     """Band signatures over minhash_table columns (cheap md5 of a concat)."""
+    return [F.expr(e) for e in band_keys_sql(n_hashes, n_bands)]
+
+
+def band_keys_sql(n_hashes: int = 16, n_bands: int = 4) -> list[str]:
     rpb = n_hashes // n_bands
-    return [
-        F.md5(F.concat_ws("|", *[F.col(f"h{b * rpb + j}") for j in range(rpb)]))
-        .alias(f"band_{b}")
-        for b in range(n_bands)
-    ]
-
-
-def lsh_bands(sig: Column, n_bands: int = 4) -> list[Column]:
-    """Band signatures: md5 of each contiguous slice of the MinHash
-    signature. Docs agreeing on ANY band become candidates."""
-    n = 16  # signature length; rows_per_band = n // n_bands
-    rpb = n // n_bands
-    return [
-        F.md5(F.array_join(F.slice(sig, b * rpb + 1, rpb), "|")).alias(f"band_{b}")
-        for b in range(n_bands)
-    ]
+    return ["md5(concat_ws('|', {})) AS band_{}".format(
+        ", ".join(f"h{b * rpb + j}" for j in range(rpb)), b)
+        for b in range(n_bands)]
 
 
 # Members per band bucket above which the in-bucket pair fan-out leaves

@@ -38,6 +38,12 @@ touched band/set partitions are the only stored bytes read.
 Layout versioning: a v2 index carries ``graft_index_meta.json`` recording
 the bucket counts; indexes built before r10 lack it and are served by the
 legacy full-scan path (still correct — rebuild to get the seek shape).
+The meta also records each table's read schema (``schemas``), so opening
+a table runs no Spark job, and the leaves the unfolded append spill lands
+in (``spill_homes``), so compaction need not read the spill to find them.
+Either record may be missing (an index written before it existed, an
+interrupted append); readers and compaction then fall back to reading
+the data, as before.
 """
 
 from __future__ import annotations
@@ -47,7 +53,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .dedup import band_keys, minhash_table, shingle_table
+from ..io import note_schema, open_stored
+from .dedup import band_keys_sql, minhash_minima_sql, shingle_rows_sql
 
 # Bucket-count CAPS for the size-adaptive layout (raised from 32, r11
 # ADVICE — the adaptive fan-out must be able to grow, not only shrink).
@@ -127,68 +134,52 @@ def _load_meta(path: str) -> dict | None:
         return json.load(f)
 
 
-def _sig_flat(df: DataFrame, id_col: str, text_col: str, n_hashes: int,
-              n_bands: int, shingle_n: int, sh: DataFrame) -> DataFrame:
-    sig = minhash_table(df, id_col, text_col, n_hashes, shingle_n, sh=sh)
-    return sig.select(F.col(id_col).alias("id"),
-                      *[F.col(f"h{i}") for i in range(n_hashes)],
-                      *band_keys(n_hashes, n_bands))
+def _open(spark: SparkSession, path: str, table: str,
+          meta: dict | None) -> DataFrame:
+    """One table of the index, opened with the schema its meta records
+    (no Spark job); a table without a record is inferred as before."""
+    rec = (meta or {}).get("schemas", {}).get(table)
+    return open_stored(spark, os.path.join(path, table), rec)
 
 
-def _write_derived(spark: SparkSession, sh: DataFrame, id_col: str,
-                   path: str, meta: dict, mode: str,
-                   sig: DataFrame | None = None,
-                   spill: bool = False) -> None:
-    """Band + shingle-set shards for one build/append, in layout v2.
+def _stage(df: DataFrame, id_col: str, text_col: str, n_hashes: int,
+           n_bands: int, shingle_n: int) -> DataFrame:
+    """One row per doc: id, h0..h{n-1}, band_0..band_{b-1} and ``sh``,
+    its distinct shingle set, from ONE aggregation over the one shuffle
+    shingle_table makes on the doc id. Signatures, band rows and the
+    verify's sets all derive from this frame; docs below ``shingle_n``
+    tokens have no shingles and drop out."""
+    ident = f"`{id_col}`"
+    rows = shingle_rows_sql(id_col, text_col, shingle_n,
+                            df.sparkSession.sparkContext.defaultParallelism)
+    hs = [f"h{i}" for i in range(n_hashes)]
+    return df.sparkSession.sql(
+        f"SELECT {ident} AS id, {', '.join(hs)}, "
+        f"{', '.join(band_keys_sql(n_hashes, n_bands))}, sh FROM ("
+        f"SELECT {ident}, {', '.join(minhash_minima_sql(n_hashes))}, "
+        f"collect_set(__s__) AS sh FROM ({rows}) GROUP BY {ident})", df=df)
 
-    On a BUILD the band rows derive from the just-written
-    ``signatures/`` files (a columnar re-read) — re-running the
-    shingle→minhash aggregation would double the build's dominant cost
-    (the bm25 ``_dl``-shard lesson, SCALE.md §r9). On an APPEND the
-    caller passes the batch's own persisted signature frame (``sig``):
-    re-reading signatures/ would pay an INDEX-sized scan per nightly
-    batch to extract batch-sized rows — the read-modify-write shape the
-    streaming measurement exists to catch (r10). ``repartition`` on the
-    directory keys keeps output to one file per written directory
-    instead of one per upstream task.
 
-    ``spill=True`` (appends — VERDICT r10 #4): a nightly batch fanned
-    one small file into EVERY touched (band_idx, sbkt) / ibkt directory
-    — ≤160 files per append, write amplification growing with the
-    bucket count, not the batch. Spilled appends instead land as ONE
-    batch-sized sorted file per table in ``bands_spill/`` /
-    ``sets_spill/`` (bucket keys carried as ordinary columns); readers
-    union the bucketed layout with the spill, and compact_index folds
-    spill rows into their home directories on the compaction cadence —
-    so steady-state reads stay seek-shaped while per-append file count
-    is O(1)."""
-    if sig is not None:
-        sig_stored = sig
-    else:
-        sig_stored = spark.read.parquet(os.path.join(path, "signatures"))
-    bands = (_banded(sig_stored)
-             .withColumn("sbkt", F.pmod(F.xxhash64("band_sig"),
-                                        F.lit(meta["sbkt"])).cast("int")))
-    sets_ = (sh.groupBy(id_col).agg(F.collect_set("__s__").alias("sh"))
-             .select(F.col(id_col).alias("id"), "sh")
-             .withColumn("ibkt", F.pmod(F.xxhash64("id"),
-                                        F.lit(meta["ibkt"])).cast("int")))
-    if spill:
-        (bands.coalesce(1).sortWithinPartitions("band_sig")
-         .write.mode("append").parquet(os.path.join(path, "bands_spill")))
-        (sets_.coalesce(1).sortWithinPartitions("id")
-         .write.mode("append").parquet(os.path.join(path, "sets_spill")))
-        return
-    (bands
-     .repartition("band_idx", "sbkt")
-     .sortWithinPartitions("band_sig")  # row-group stats → IN-pushdown seeks
-     .write.mode(mode).partitionBy("band_idx", "sbkt")
-     .parquet(os.path.join(path, "bands")))
-    (sets_
-     .repartition("ibkt")
-     .sortWithinPartitions("id")  # row-group stats → IN-pushdown seeks
-     .write.mode(mode).partitionBy("ibkt")
-     .parquet(os.path.join(path, "shingle_sets")))
+def _signatures(stage: DataFrame) -> DataFrame:
+    return stage.drop("sh")
+
+
+# Plan construction on the ingest path is built from SQL strings: each
+# Column-builder call is a py4j round trip, and those added up to about
+# a second per daily batch.
+
+def _bucket(col: str, n: int) -> str:
+    return f"CAST(pmod(xxhash64({col}), {int(n)}) AS INT)"
+
+
+def _band_rows(stage: DataFrame, meta: dict) -> DataFrame:
+    return _banded(stage).selectExpr(
+        "*", _bucket("band_sig", meta["sbkt"]) + " AS sbkt")
+
+
+def _set_rows(stage: DataFrame, meta: dict) -> DataFrame:
+    return stage.selectExpr("id", "sh",
+                            _bucket("id", meta["ibkt"]) + " AS ibkt")
 
 
 def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
@@ -198,89 +189,103 @@ def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
     """Materialize signatures, the bucketed band table and bucketed
     shingle sets under ``path``.
 
-    One scan of the corpus feeds everything; the shingle rows shuffle once
-    on the doc id (repartition inside shingle_table) and both aggregates
-    reuse that partitioning. Band keys are stored denormalized so candidate
-    generation later is a pure read, no hashing — and in the v2 layout
-    already exploded into ``(band_idx, sbkt)`` directories so delta
-    queries prune to the collidable partitions. Bucket counts default to
-    SIZE-ADAPTIVE (_auto_buckets, from the indexed doc count): a fixed
-    fan-out was 160 tiny files at sf0.1 and the measured floor of the
-    nightly delta's stored scan; pass explicit counts to pin a layout."""
+    One scan of the corpus feeds everything: the staged per-doc rows
+    (:func:`_stage`) are persisted and written three ways, and the
+    signatures write counts the indexed docs through an Observation.
+    Band keys are stored denormalized so candidate generation later is
+    a pure read, no hashing, and already exploded into ``(band_idx,
+    sbkt)`` directories so delta queries prune to the collidable
+    partitions. Bucket counts default to SIZE-ADAPTIVE (_auto_buckets,
+    from the indexed doc count); pass explicit counts to pin a layout.
+    The meta records every table's read schema, so opens run no job."""
+    from pyspark.sql import Observation
+
     meta = {"layout": 2, "n_hashes": n_hashes, "n_bands": n_bands,
             "shingle_n": shingle_n}
-    sh = shingle_table(df, id_col, text_col, shingle_n).persist()
+    schemas = meta["schemas"] = {}
+    stage = _stage(df, id_col, text_col, n_hashes, n_bands,
+                   shingle_n).persist()
     try:
-        (_sig_flat(df, id_col, text_col, n_hashes, n_bands, shingle_n, sh)
+        obs = Observation()
+        sig = _signatures(stage)
+        (sig.observe(obs, F.count(F.lit(1)).alias("n"))
          .write.mode("overwrite").parquet(os.path.join(path, "signatures")))
-        # indexed doc count (signature rows — docs below shingle_n
-        # tokens drop out) sizes the delta-query regime choice AND the
-        # bucket fan-out; read from the written files, not the lineage
-        meta["n_docs"] = (df.sparkSession.read
-                          .parquet(os.path.join(path, "signatures")).count())
+        note_schema(schemas, "signatures", sig, True)
+        # the indexed doc count sizes the delta-query regime choice AND
+        # the bucket fan-out
+        meta["n_docs"] = int(obs.get["n"])
         auto_s, auto_i = _auto_buckets(meta["n_docs"], n_bands)
         meta["sbkt"] = int(n_sig_buckets) if n_sig_buckets else auto_s
         meta["ibkt"] = int(n_set_buckets) if n_set_buckets else auto_i
-        _write_derived(df.sparkSession, sh, id_col, path, meta, "overwrite")
+        bands = _band_rows(stage, meta)
+        (bands
+         .repartition("band_idx", "sbkt")
+         .sortWithinPartitions("band_sig")  # row-group stats → IN-pushdown seeks
+         .write.mode("overwrite").partitionBy("band_idx", "sbkt")
+         .parquet(os.path.join(path, "bands")))
+        note_schema(schemas, "bands", bands, True, ("band_idx", "sbkt"))
+        sets_ = _set_rows(stage, meta)
+        (sets_
+         .repartition("ibkt")
+         .sortWithinPartitions("id")  # row-group stats → IN-pushdown seeks
+         .write.mode("overwrite").partitionBy("ibkt")
+         .parquet(os.path.join(path, "shingle_sets")))
+        note_schema(schemas, "shingle_sets", sets_, True, ("ibkt",))
         _write_meta(path, **meta)
     finally:
-        sh.unpersist()
+        stage.unpersist()
 
 
 def read_signatures(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, "signatures"))
+    return _open(spark, path, "signatures", _load_meta(path))
 
 
 def read_shingle_sets(spark: SparkSession, path: str) -> DataFrame:
-    base = spark.read.parquet(os.path.join(path, "shingle_sets"))
-    if "ibkt" not in base.columns:  # legacy v1 layout: flat, no spill
-        return base.select("id", "sh")
-    return _read_sets_with_ibkt(spark, path).select("id", "sh")
+    meta = _load_meta(path)
+    if meta is None:  # legacy v1 layout: flat, no spill
+        return _open(spark, path, "shingle_sets", None).select("id", "sh")
+    return _read_sets_with_ibkt(spark, path, meta).select("id", "sh")
 
 
-def _read_sets_with_ibkt(spark: SparkSession, path: str) -> DataFrame:
+def _read_sets_with_ibkt(spark: SparkSession, path: str,
+                         meta: dict) -> DataFrame:
     """shingle_sets ∪ the unfolded append spill (id, sh, ibkt) — ibkt is
     a partition column on the bucketed side, an ordinary column on the
     spill side; above the union it is just a column, and Catalyst
     pushes ibkt/id filters through the union into both scans (directory
     pruning on the bucketed child, row-group stats on the spill)."""
-    out = (spark.read.parquet(os.path.join(path, "shingle_sets"))
-           .select("id", "sh", "ibkt"))
-    spill = os.path.join(path, "sets_spill")
-    if os.path.isdir(spill):
-        out = out.unionByName(
-            spark.read.parquet(spill).select("id", "sh", "ibkt"))
+    out = _open(spark, path, "shingle_sets", meta).select("id", "sh", "ibkt")
+    if os.path.isdir(os.path.join(path, "sets_spill")):
+        out = out.unionByName(_open(spark, path, "sets_spill", meta)
+                              .select("id", "sh", "ibkt"))
     return out
 
 
 def _banded(sig: DataFrame) -> DataFrame:
     bands = sorted(c for c in sig.columns if c.startswith("band_"))
-    return sig.select(
-        "id",
-        F.posexplode(F.array(*[F.col(b) for b in bands])).alias("band_idx", "band_sig"),
-    )
+    return sig.selectExpr("id", "posexplode(array({})) AS (band_idx, band_sig)"
+                          .format(", ".join(bands)))
 
 
-def _read_bands(spark: SparkSession, path: str) -> DataFrame:
-    out = (spark.read.parquet(os.path.join(path, "bands"))
+def _read_bands(spark: SparkSession, path: str, meta: dict) -> DataFrame:
+    out = (_open(spark, path, "bands", meta)
            .select("id", "band_idx", "band_sig", "sbkt"))
-    spill = os.path.join(path, "bands_spill")
-    if os.path.isdir(spill):
+    if os.path.isdir(os.path.join(path, "bands_spill")):
         # unfolded appends: (band_idx, sbkt) are ordinary columns here;
         # the lookup regime's prune predicate still reaches both scans
         # (pushed through the union — dirs on the bucketed child,
         # row-group stats on the sorted spill files)
-        out = out.unionByName(
-            spark.read.parquet(spill)
-            .select("id", "band_idx", "band_sig", "sbkt"))
+        out = out.unionByName(_open(spark, path, "bands_spill", meta)
+                              .select("id", "band_idx", "band_sig", "sbkt"))
     return out
 
 
 def candidate_pairs_from_index(spark: SparkSession, path: str,
                                max_bucket_size: int | None = None) -> DataFrame:
     """LSH candidates from the stored band table — no text scan at all."""
-    if _load_meta(path) is not None:
-        banded = _read_bands(spark, path).drop("sbkt")
+    meta = _load_meta(path)
+    if meta is not None:
+        banded = _read_bands(spark, path, meta).drop("sbkt")
     else:  # legacy layout: explode the signature table per query
         banded = _banded(read_signatures(spark, path))
     if max_bucket_size is not None:
@@ -306,59 +311,83 @@ def near_dup_pairs_from_index(spark: SparkSession, path: str,
     corpus/parameters — test_dedup_index asserts this — but the only
     inputs are the derived tables."""
     cands = candidate_pairs_from_index(spark, path, max_bucket_size)
-    # ids can be duplicated across leaf+spill (crash between compact's
-    # fold and spill rmtree, or a replayed append) — without the dedup
-    # the verify join emits duplicate pairs (r11 ADVICE). Rows are
-    # md5-identical per id, so any-row-wins is exact; skip the shuffle
-    # when no spill exists (the only duplication source).
+    # an id can sit in a leaf AND the spill (a replayed append, or a
+    # crash between compaction's swap and its spill removal); its rows
+    # are md5-identical, so any-row-wins is exact. Without a spill there
+    # is no duplication and no shuffle to pay.
     sets_ = read_shingle_sets(spark, path)
     if os.path.isdir(os.path.join(path, "sets_spill")):
         sets_ = sets_.dropDuplicates(["id"])
-    j = (cands
-         .join(sets_.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-         .join(sets_.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-         .withColumn("uni", F.size("sh_a") + F.size("sh_b") - F.col("inter"))
-         .withColumn("jaccard", F.col("inter") / F.col("uni")))
-    return (j.filter(F.col("jaccard") >= threshold)
-             .select("id_a", "id_b", "jaccard"))
+    return _verify_jaccard(cands, sets_, threshold)
 
 
 def append_to_index(df_new: DataFrame, id_col: str, text_col: str, path: str,
                     n_hashes: int = 16, n_bands: int = 4,
                     shingle_n: int = 3) -> None:
-    """Incremental ingest: compute signatures/band rows/shingle sets for
-    NEW docs only and append. md5 determinism makes re-appending the same
-    docs produce identical rows (dedupable by id downstream); the
-    historical corpus is never rescanned. Appending to a pre-r10 (v1)
-    index keeps the legacy layout (no bands/ table) — rebuild for the
-    seek-shaped delta path."""
+    """Incremental ingest: signatures, band rows and shingle sets for
+    NEW docs only, appended; the historical corpus is never rescanned.
+    md5 determinism makes re-appending the same docs produce identical
+    rows (deduped by id downstream).
+
+    The batch is staged once (:func:`_stage`) and feeds three writes:
+    ``signatures/``, and ONE batch-sized sorted file each in
+    ``bands_spill/`` and ``sets_spill/`` with the bucket keys as
+    ordinary columns (readers union the spill with the bucketed layout;
+    :func:`compact_index` folds it into its home directories), so an
+    append's file count is O(1) whatever the bucket count. The same
+    writes observe the doc count (``n_docs``, which sizes the delta
+    query's regimes; a replayed batch double-counts, which only nudges
+    a threshold) and the spill's home directories, which compaction
+    reads back from the meta. Appending to a v1 index (no meta) keeps
+    its legacy layout: no bands/ table, flat shingle sets."""
+    from pyspark.sql import Observation
+
     meta = _load_meta(path)
     if meta is not None:
         assert (meta["n_hashes"], meta["n_bands"]) == (n_hashes, n_bands), \
             "index built with different n_hashes/n_bands"
-    sh = shingle_table(df_new, id_col, text_col, shingle_n).persist()
-    sig = _sig_flat(df_new, id_col, text_col, n_hashes, n_bands,
-                    shingle_n, sh).persist()
+    stage = _stage(df_new, id_col, text_col, n_hashes, n_bands,
+                   shingle_n).persist()
     try:
-        sig.write.mode("append").parquet(os.path.join(path, "signatures"))
-        if meta is not None:
-            _write_derived(df_new.sparkSession, sh, id_col, path, meta,
-                           "append", sig=sig, spill=True)
-            # increment the doc count by this batch (batch-sized; a
-            # full recount paid an index-sized read per append — r10).
-            # Replay-safe: a re-appended batch double-counts here,
-            # which only nudges the regime threshold, never correctness
-            meta["n_docs"] = int(meta.get("n_docs", 0)) + sig.count()
-            _write_meta(path, **meta)
-        else:
-            (sh.groupBy(id_col).agg(F.collect_set("__s__").alias("sh"))
-             .select(F.col(id_col).alias("id"), "sh")
-             .write.mode("append")
-             .parquet(os.path.join(path, "shingle_sets")))
+        if meta is None:
+            _signatures(stage).write.mode("append").parquet(
+                os.path.join(path, "signatures"))
+            stage.select("id", "sh").write.mode("append").parquet(
+                os.path.join(path, "shingle_sets"))
+            return
+        spilled = any(os.path.isdir(os.path.join(path, t))
+                      for t in ("bands_spill", "sets_spill"))
+        known = (meta.get("spill_homes") if spilled
+                 else {"bands": [], "sets": []})
+        # until this append's homes are recorded, the spill's homes are
+        # unknown: an interrupted append leaves compaction to find them
+        meta["spill_homes"] = None
+        _write_meta(path, **meta)
+        n_obs = Observation()
+        sig = _signatures(stage)
+        (sig.observe(n_obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("append").parquet(os.path.join(path, "signatures")))
+        schemas = meta.setdefault("schemas", {})
+        note_schema(schemas, "signatures", sig, False)
+        for table, rows, sort_col, keys in (
+                ("bands_spill", _band_rows(stage, meta), "band_sig",
+                 ["band_idx", "sbkt"]),
+                ("sets_spill", _set_rows(stage, meta), "id", ["ibkt"])):
+            fresh = not os.path.isdir(os.path.join(path, table))
+            obs = Observation()
+            (rows.observe(obs, F.collect_set(F.array(*keys)).alias("h"))
+             .coalesce(1).sortWithinPartitions(sort_col)
+             .write.mode("append").parquet(os.path.join(path, table)))
+            note_schema(schemas, table, rows, fresh)
+            if known is not None:
+                kind = table.split("_")[0]
+                known[kind] = sorted({tuple(h) for h in known[kind]}
+                                     | {tuple(h) for h in obs.get["h"]})
+        meta["spill_homes"] = known
+        meta["n_docs"] = int(meta.get("n_docs", 0)) + int(n_obs.get["n"])
+        _write_meta(path, **meta)
     finally:
-        sh.unpersist()
-        sig.unpersist()
+        stage.unpersist()
 
 
 def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
@@ -370,171 +399,80 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
     tokenized; the corpus side is the stored band table. Pair order is
     normalized (id_a < id_b) so output matches a full-corpus run.
 
-    v2 layout (r10): the verify stage NEVER pays the corpus — stored
-    shingle sets are cut to candidate ids (semi-join, or a pushed IN
-    predicate when the candidate list is collect-small) before the
-    union/dedup, where the former code shuffled every corpus row's
-    shingle array through a ``dropDuplicates``. The candidate stage is
-    ADAPTIVE on measured delta size (one count over the persisted delta
-    band rows, the auto-multiprobe pattern):
+    The delta is staged once (:func:`_stage`, persisted): its band rows,
+    its shingle sets and the sizing all read that one frame. The action
+    that materializes the stage observes the delta's doc count (every
+    doc has ``n_bands`` band rows), and the candidate stage is ADAPTIVE
+    on it:
 
-    - **lookup regime** (≤ ``_LOOKUP_CAP`` distinct delta band keys —
-      the "is this batch of docs already in the corpus" interactive
-      shape; distinct keys bound the pushed IN-list size, r12): the
-      delta's band keys are collected and pushed as literal predicates
-      on the stored band read — ``(band_idx, sbkt)`` prunes partition
-      directories outright, and ``band_sig IN (...)`` skips row groups
-      inside the survivors (files are laid down sorted by band_sig), so
-      the stored side reads a few seeks' worth of bytes however big the
-      corpus is. Candidate ids get the same treatment against the
-      id-sorted ``ibkt`` set partitions.
-    - **batch regime** (a big nightly delta): thousands of band keys
-      hit every bucket, so pruning predicates select everything and
-      only add cost — measured 1.9× on the 50%-delta fixture at the
-      10× rig before this regime split. The stored band table is
-      scanned once (it is ~1% of corpus bytes — the scan IS the floor)
-      with no filter; the verify keeps the candidate semi-join.
+    - **lookup regime** (≤ ``_LOOKUP_CAP`` delta band rows — the "is
+      this batch already in the corpus" shape): the band keys are
+      collected from the stage and pushed as literal predicates on the
+      stored band read. ``band_sig
+      IN (...)`` skips row groups of the band_sig-sorted files; the
+      ``(band_idx, sbkt)`` OR-chain prunes directories too, but every
+      surviving row evaluates the whole chain, so it is added only when
+      the keys hit at most ``_LOOKUP_DIR_BUDGET`` of the directories.
+    - **batch regime** (a nightly delta): thousands of band keys hit
+      every bucket, so the stored band table is scanned once unfiltered
+      (it is ~1% of corpus bytes — the scan IS the floor).
+    - **bulk regime** (delta band rows above ``_BULK_FRACTION`` of the
+      stored ones — a re-dedup, not an ingest): candidate ids approach
+      the corpus, so restricting the verify buys nothing and staged
+      barriers would serialize what one lazy plan pipelines; one lazy
+      plan runs off the stored tables.
 
-    Under plan-only probes the sizing counts are skipped (explain must
-    execute nothing) and the lazy batch-regime plan is returned."""
+    In the lookup and batch regimes the distinct candidate pairs are
+    limit-collected at ``_SEEK_CAP + 1``: when they and their ids fit,
+    the verify reads stored shingle sets by pushed ``ibkt``/``id IN``
+    predicates and pairs them with the broadcast candidates in one
+    shuffle (:func:`_verify_listed`); otherwise it semi-joins the
+    stored sets to the candidate ids. Either way the verify never
+    shuffles the corpus' shingle arrays.
+
+    Under plan-only probes the sizing is skipped (explain must execute
+    nothing) and the lazy bulk-shaped plan is returned."""
+    from pyspark.sql import Observation
+
     from ..planmode import is_plan_only
+    from .dedup import _materialize_release
 
     meta = _load_meta(path)
-    sh_new = shingle_table(df_new, id_col, text_col, shingle_n)
-    sig_new = minhash_table(df_new, id_col, text_col, n_hashes, shingle_n,
-                            sh=sh_new)
-    banded_new = (sig_new.select(F.col(id_col).alias("id"),
-                                 *band_keys(n_hashes, n_bands))
-                  .transform(_banded))
-    sets_new = (sh_new.groupBy(id_col).agg(F.collect_set("__s__").alias("sh"))
-                .select(F.col(id_col).alias("id"), "sh"))
+    stage = _stage(df_new, id_col, text_col, n_hashes, n_bands, shingle_n)
+    sets_new = stage.select("id", "sh")
     if meta is None or is_plan_only():
         if meta is None:
             stored_bands = _banded(read_signatures(spark, path))
         else:
-            stored_bands = _read_bands(spark, path).drop("sbkt")
-        banded_all = banded_new.unionByName(stored_bands)
-        a, b = banded_new.alias("a"), banded_all.alias("b")
-        cands = (
-            a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.id") != F.col("b.id")))
-            .select(F.least("a.id", "b.id").alias("id_a"),
-                    F.greatest("a.id", "b.id").alias("id_b"))
-            .distinct()
-        )
-        sets_ = (sets_new.unionByName(read_shingle_sets(spark, path))
-                 .dropDuplicates(["id"]))
-        return _verify_jaccard(cands, sets_, threshold)
+            stored_bands = _read_bands(spark, path, meta)
+        return _verify_jaccard(
+            _cross_pairs(_banded(stage), stored_bands),
+            sets_new.unionByName(read_shingle_sets(spark, path))
+            .dropDuplicates(["id"]), threshold)
 
-    from .dedup import _materialize_release
-
-    sh_new = sh_new.persist()  # feeds BOTH the minhash and the verify's
-    # sets_new leg — unpersisted, the verify re-tokenized the delta
-    # (measured ~10% of the 1% nightly wall, r11)
-    banded_new = banded_new.withColumn(
-        "sbkt", F.pmod(F.xxhash64("band_sig"),
-                       F.lit(meta["sbkt"])).cast("int")).persist()
-    # sizing probe, ONE action for the whole lookup path (r12 — the
-    # r11 form ran a sizing agg AND, in lookup regime, a second
-    # distinct-collect over the same persisted rows; the interactive
-    # shape paid two driver barriers for one decision): group to the
-    # distinct pushdown keys and limit-collect _LOOKUP_CAP+1 of them
-    # with their row counts. ≤ cap groups → this collect already holds
-    # everything every later decision needs (exact total band rows =
-    # sum of counts for the bulk gate, the exact dir-hit set for the
-    # OR-chain budget, and the IN-list keys themselves); > cap groups
-    # → a count-only agg decides bulk vs batch (one extra action only
-    # on big deltas, where it is noise against the scan it precedes).
-    # The lookup gate statistic becomes DISTINCT keys rather than raw
-    # band rows — the IN list is built from distinct keys, so the cap
-    # now bounds the actual pushed-predicate size (a duplicate-heavy
-    # delta no longer falls out of lookup for rows it dedups anyway).
-    # The total band-row count (the bulk gate's statistic) rides the
-    # SAME job as an observed metric (df.observe sits below the
-    # groupBy, so every persisted row flows through it before the
-    # exchange — the limit above the aggregate cannot short-circuit
-    # map-side work): sizing is ONE driver barrier in EVERY regime.
-    # (The v2.2 interim ran a separate count() when the group limit
-    # overflowed — measured +0.6s on the 10× batch shape; the
-    # observation gets the count for free.)
-    from pyspark.sql import Observation
-
+    stage.persist()  # sets_new reads it too
+    banded_new = _band_rows(stage, meta)
     obs = Observation()
-    grouped = (banded_new
-               .observe(obs, F.count(F.lit(1)).alias("n"))
-               .groupBy("band_idx", "sbkt", "band_sig")
-               .agg(F.count(F.lit(1)).alias("__n__"))
-               .limit(_LOOKUP_CAP + 1).collect())
-    n_delta_bands = int(obs.get["n"])
-    in_lookup = len(grouped) <= _LOOKUP_CAP
-    # Observed-metric invariant (ADVICE r12): Spark only guarantees an
-    # Observation when the plan consumes its input; the shuffle map
-    # stage below the groupBy forces that today, but a future
-    # limit/AQE pushdown across the partial aggregate would silently
-    # under-read n_delta_bands and misroute the regime. When the limit
-    # did NOT truncate, the collected groups are exhaustive, so their
-    # counts must sum to exactly the observed total — assert it (zero
-    # extra driver actions; the collect already happened).
-    if in_lookup:
-        assert n_delta_bands == sum(int(r["__n__"]) for r in grouped), (
-            "observed band-row count diverged from the exhaustive group "
-            "sum — the Observation no longer sees every input row "
-            f"({n_delta_bands} observed vs "
-            f"{sum(int(r['__n__']) for r in grouped)} grouped)")
-    n_dirs_hit = len({(int(r["band_idx"]), int(r["sbkt"]))
-                      for r in grouped}) if in_lookup else 0
+    (stage.observe(obs, F.count(F.lit(1)).alias("n"))
+     .write.format("noop").mode("overwrite").save())
+    n_delta_bands = int(obs.get["n"]) * n_bands  # n_bands rows per doc
     stored_bands_total = meta.get("n_docs", 0) * meta["n_bands"]
     if (stored_bands_total and
             n_delta_bands > _BULK_FRACTION * stored_bands_total):
-        # BULK regime: the "delta" is a large fraction of the corpus
-        # (re-dedup of a merged dump, the 50%-delta oracle fixture).
-        # Candidate ids approach the corpus, so candidate-restricting
-        # the verify buys nothing — and the staged barriers the other
-        # regimes need (persist cands, sizing counts, checkpoint)
-        # serialize what one lazy plan pipelines across all cores
-        # (measured 3.8× on the fixture at 1× before this regime
-        # existed). Run the v1-shaped single lazy plan off the stored
-        # band table; the persisted delta band rows still cut the
-        # delta pipeline from 3 executions to 1.
-        stored_bands = _read_bands(spark, path).drop("sbkt")
-        banded_all = banded_new.drop("sbkt").unionByName(stored_bands)
-        a, b = banded_new.alias("a"), banded_all.alias("b")
-        cands = (
-            a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.id") != F.col("b.id")))
-            .select(F.least("a.id", "b.id").alias("id_a"),
-                    F.greatest("a.id", "b.id").alias("id_b"))
-            .distinct()
-        )
+        cands = _cross_pairs(banded_new, _read_bands(spark, path, meta))
         sets_ = (sets_new.unionByName(read_shingle_sets(spark, path))
                  .dropDuplicates(["id"]))
         return _materialize_release(
-            _verify_jaccard(cands, sets_, threshold), banded_new, sh_new)
-    stored_b = _read_bands(spark, path)
-    n_dirs = int(meta["sbkt"]) * int(meta["n_bands"])
-    if in_lookup:
-        # lookup regime, split into its two independent mechanisms
-        # (r11 — the r10 form coupled them and lost both when either
-        # failed):
-        # 1. ``band_sig IN (...)`` — ONE hash-set membership per row,
-        #    cheap at any selectivity, and row-group stats on the
-        #    sorted files turn it into seeks inside every directory.
-        #    Always pushed for a ≤_LOOKUP_CAP delta.
-        # 2. the (band_idx, sbkt) OR-chain — real directory pruning,
-        #    but every surviving row evaluates the whole chain, so it
-        #    only pays when the hit set actually prunes (the r10 rig
-        #    measured a 200-key delta — ~100 of 128 dirs hit — at 4.6s
-        #    vs ~1.3s as a plain join). Gated on the exact
-        #    directory-hit count — already in hand from the one
-        #    grouped sizing collect, no further action.
-        rows = grouped
-        if n_dirs_hit <= max(1, int(n_dirs * _LOOKUP_DIR_BUDGET)):
-            hit: dict[tuple[int, int], list[str]] = {}
-            for r in rows:
-                hit.setdefault((int(r["band_idx"]), int(r["sbkt"])),
-                               []).append(r["band_sig"])
+            _verify_jaccard(cands, sets_, threshold), stage)
+    stored_b = _read_bands(spark, path, meta)
+    if n_delta_bands <= _LOOKUP_CAP:
+        keys = {tuple(r) for r in banded_new.select(
+            "band_idx", "sbkt", "band_sig").collect()}
+        n_dirs = int(meta["sbkt"]) * int(meta["n_bands"])
+        hit: dict[tuple[int, int], list[str]] = {}
+        for bi, bk, sig in keys:
+            hit.setdefault((bi, bk), []).append(sig)
+        if len(hit) <= max(1, int(n_dirs * _LOOKUP_DIR_BUDGET)):
             prune = F.lit(False)
             for (bi, bk), sigs in hit.items():
                 prune = prune | ((F.col("band_idx") == bi)
@@ -543,65 +481,92 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
             stored_b = stored_b.filter(prune)
         else:
             stored_b = stored_b.filter(
-                F.col("band_sig").isin([r["band_sig"] for r in rows]))
-    a = banded_new.alias("a")
-    cross = (a.join(stored_b.alias("b"),
-                    (F.col("a.band_idx") == F.col("b.band_idx"))
-                    & (F.col("a.band_sig") == F.col("b.band_sig"))
-                    & (F.col("a.id") != F.col("b.id")))
-             .select(F.least("a.id", "b.id").alias("id_a"),
-                     F.greatest("a.id", "b.id").alias("id_b")))
-    c = banded_new.alias("c")
-    within = (a.join(c, (F.col("a.band_idx") == F.col("c.band_idx"))
-                     & (F.col("a.band_sig") == F.col("c.band_sig"))
-                     & (F.col("a.id") < F.col("c.id")))
-              .select(F.col("a.id").alias("id_a"),
-                      F.col("c.id").alias("id_b")))
-    cands = cross.unionByName(within).distinct().persist()
-    cand_ids = (cands.select(F.col("id_a").alias("id"))
-                .unionByName(cands.select(F.col("id_b").alias("id")))
-                .distinct())
-    stored_sets = _read_sets_with_ibkt(spark, path)
-    # sizing + seek keys in ONE action: limit(cap+1) both bounds the
-    # collect and answers "≤ cap?" (v2.0 ran a count, then a second
-    # collect over the same persisted cands — one driver round-trip per
-    # nightly run for nothing). The action materializes the cands
-    # persist; the verify below reuses it.
-    rows = (cand_ids.withColumn(
-        "ibkt", F.pmod(F.xxhash64("id"),
-                       F.lit(meta["ibkt"])).cast("int"))
-        .limit(_SEEK_CAP + 1).collect())
-    if len(rows) <= _SEEK_CAP:
-        ids = [r["id"] for r in rows]
-        ibkts = sorted({int(r["ibkt"]) for r in rows})
+                F.col("band_sig").isin([sig for _, _, sig in keys]))
+    cands = (_cross_pairs(banded_new, stored_b)
+             .selectExpr("*", *[_bucket(f"id_{s}", meta["ibkt"])
+                                + f" AS ibkt_{s}" for s in "ab"])
+             .persist())
+    listed = cands.limit(_SEEK_CAP + 1).collect()
+    ids = {r[k] for r in listed for k in ("id_a", "id_b")}
+    stored_sets = _read_sets_with_ibkt(spark, path, meta)
+    if len(listed) <= _SEEK_CAP and len(ids) <= _SEEK_CAP:
+        ibkts = sorted({r[k] for r in listed for k in ("ibkt_a", "ibkt_b")})
         stored_sets = (stored_sets
                        .filter(F.col("ibkt").isin(ibkts) if ibkts
                                else F.lit(False))
-                       .filter(F.col("id").isin(ids) if ids
+                       .filter(F.col("id").isin(list(ids)) if ids
                                else F.lit(False)))
+        out = _verify_listed(
+            cands.select("id_a", "id_b"),
+            sets_new.unionByName(stored_sets.select("id", "sh")), threshold)
     else:
-        stored_sets = stored_sets.join(cand_ids, "id", "left_semi")
-    # union/dedup runs over candidate-bounded rows only — never a
-    # corpus-wide shuffle of the shingle arrays
-    sets_ = (sets_new.join(cand_ids, "id", "left_semi")
-             .unionByName(stored_sets.select("id", "sh"))
-             .dropDuplicates(["id"]))
-    return _materialize_release(_verify_jaccard(cands, sets_, threshold),
-                                banded_new, cands, sh_new)
+        cand_ids = (cands.select(F.col("id_a").alias("id"))
+                    .unionByName(cands.select(F.col("id_b").alias("id")))
+                    .distinct())
+        sets_ = (sets_new.join(cand_ids, "id", "left_semi")
+                 .unionByName(stored_sets.join(cand_ids, "id", "left_semi")
+                              .select("id", "sh"))
+                 .dropDuplicates(["id"]))
+        out = _verify_jaccard(cands.select("id_a", "id_b"), sets_, threshold)
+    return _materialize_release(out, stage, cands)
+
+
+def _cross_pairs(banded_new: DataFrame, stored: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of a delta band row and a stored or
+    delta band row on the same band key: the delta-vs-corpus candidates
+    and the within-delta ones in one join (the delta side is small and
+    staged, so it is the broadcast side)."""
+    a = banded_new.select("id", "band_idx", "band_sig")
+    b = a.unionByName(stored.select("id", "band_idx", "band_sig"))
+    return (a.alias("a")
+            .join(b.alias("b"), F.expr("a.band_idx = b.band_idx AND "
+                                       "a.band_sig = b.band_sig AND "
+                                       "a.id <> b.id"))
+            .selectExpr("least(a.id, b.id) AS id_a",
+                        "greatest(a.id, b.id) AS id_b")
+            .distinct())
 
 
 def _verify_jaccard(cands: DataFrame, sets_: DataFrame,
                     threshold: float) -> DataFrame:
-    j = (cands
-         .join(sets_.select(F.col("id").alias("id_a"),
-                            F.col("sh").alias("sh_a")), "id_a")
-         .join(sets_.select(F.col("id").alias("id_b"),
-                            F.col("sh").alias("sh_b")), "id_b")
-         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-         .withColumn("uni", F.size("sh_a") + F.size("sh_b") - F.col("inter"))
-         .withColumn("jaccard", F.col("inter") / F.col("uni")))
-    return (j.filter(F.col("jaccard") >= threshold)
-             .select("id_a", "id_b", "jaccard"))
+    """Exact Jaccard of every candidate pair; ``sets_`` holds each id
+    once."""
+    return _jaccard(
+        cands
+        .join(sets_.selectExpr("id AS id_a", "sh AS sh_a"), "id_a")
+        .join(sets_.selectExpr("id AS id_b", "sh AS sh_b"), "id_b"),
+        threshold)
+
+
+def _verify_listed(cands: DataFrame, sets_: DataFrame,
+                   threshold: float) -> DataFrame:
+    """Exact Jaccard of a candidate set known to be small (it was
+    listed on the driver, so it is the broadcast side) in ONE shuffle:
+    each set row meets the pairs it belongs to on either side, and
+    grouping by the pair brings both sets together. An id may appear in
+    ``sets_`` more than once (delta ∪ spill ∪ leaf); its rows are
+    md5-identical, so the first non-null set per side is exact."""
+    none = "CAST(NULL AS {})".format(sets_.schema["sh"].dataType.simpleString())
+    sides = [sets_.join(F.broadcast(cands.withColumnRenamed(f"id_{s}", "id")),
+                        "id")
+             .selectExpr(f"id AS id_{s}", f"id_{o}", f"sh AS sh_{s}",
+                         f"{none} AS sh_{o}")
+             for s, o in (("a", "b"), ("b", "a"))]
+    j = (sides[0].unionByName(sides[1])
+         .groupBy("id_a", "id_b")
+         .agg(F.expr("first(sh_a, true) AS sh_a"),
+              F.expr("first(sh_b, true) AS sh_b"))
+         .filter("sh_a IS NOT NULL AND sh_b IS NOT NULL"))
+    return _jaccard(j, threshold)
+
+
+def _jaccard(j: DataFrame, threshold: float) -> DataFrame:
+    """``(id_a, id_b, sh_a, sh_b)`` → pairs at or above ``threshold``."""
+    return (j.selectExpr("id_a", "id_b",
+                         "size(array_intersect(sh_a, sh_b)) AS inter",
+                         "size(sh_a) + size(sh_b) AS n")
+            .selectExpr("id_a", "id_b", "inter / (n - inter) AS jaccard")
+            .filter(F.col("jaccard") >= threshold))
 
 
 def purge_from_index(spark: SparkSession, path: str, ids) -> int:
@@ -618,7 +583,7 @@ def purge_from_index(spark: SparkSession, path: str, ids) -> int:
     byte-identical, a replayed purge is a true no-op (returns 0), and
     the return value counts only directories that actually shed rows.
     Ids keep their native type — no numeric coercion, so string-keyed
-    indexes purge correctly (r10 review). Rewrites go through
+    indexes purge correctly. Rewrites go through
     iosafe.atomic_rewrite (discovery-invisible temp + swap; interrupted
     swaps self-heal via adopt_orphans at the start of every pass).
     n_docs decrements so the delta-regime threshold tracks the live
@@ -655,10 +620,11 @@ def purge_from_index(spark: SparkSession, path: str, ids) -> int:
             F.pmod(F.xxhash64("id"), F.lit(meta["ibkt"])).cast("int")
             .alias("ibkt")).distinct().collect()]
 
-        def _purge_dir(sub: str) -> int:
+        def _purge_dir(sub: str, table: str) -> int:
             if not os.path.isdir(sub):
                 return 0
-            shard = spark.read.parquet(sub)
+            shard = open_stored(spark, sub,
+                                meta.get("schemas", {}).get(table))
             if shard.join(F.broadcast(ids_df), "id", "left_semi") \
                     .isEmpty():
                 return 0
@@ -670,15 +636,16 @@ def purge_from_index(spark: SparkSession, path: str, ids) -> int:
         for r in hit_dirs:
             rewritten += _purge_dir(os.path.join(
                 path, "bands", f"band_idx={r['band_idx']}",
-                f"sbkt={r['sbkt']}"))
+                f"sbkt={r['sbkt']}"), "bands")
         for k in ibkts:
             rewritten += _purge_dir(
-                os.path.join(path, "shingle_sets", f"ibkt={k}"))
+                os.path.join(path, "shingle_sets", f"ibkt={k}"),
+                "shingle_sets")
         # unfolded append spill: batch-sized by construction, so each
         # spill table purges as ONE probed unit (still membership-gated
         # — an untouched spill stays byte-identical)
         for d in ("bands_spill", "sets_spill"):
-            rewritten += _purge_dir(os.path.join(path, d))
+            rewritten += _purge_dir(os.path.join(path, d), d)
         atomic_rewrite(sig.join(F.broadcast(ids_df), "id", "left_anti"),
                        os.path.join(path, "signatures"))
         rewritten += 1
@@ -691,89 +658,90 @@ def purge_from_index(spark: SparkSession, path: str, ids) -> int:
 
 
 def compact_index(spark: SparkSession, path: str) -> int:
-    """Fold per-append file churn: every append writes one file into
-    each touched (band_idx, sbkt) / ibkt directory, so after B nightly
-    batches a directory holds up to B small files — read fan-in and
-    open-cost grow with ingest history, not data. Compaction rewrites
-    each multi-file directory to ONE file re-sorted on its seek column
-    (band_sig / id — the row-group-stats order the lookup regime's IN
-    pushdown relies on, which interleaved appends progressively
-    degrade). signatures/ coalesces the same way. Read-invisible: same
-    rows, same answers (test-pinned); rewrites go through
-    iosafe.atomic_rewrite (discovery-invisible temp + self-healing
-    swap). Returns directories rewritten. Run it on the compaction
-    cadence the storage lifecycle kit uses for the batch-keyed
-    families."""
-    import glob as _glob
+    """Fold the append spill into the bucketed layout and re-sort
+    multi-file leaves. Each table is rewritten in ONE distributed write
+    (iosafe.rewrite_leaves): the spill ∪ the leaves it lands in, plus
+    any leaf holding more than one file, deduplicated, clustered on the
+    leaf key, sorted within each leaf on its seek column (band_sig /
+    id — the row-group-stats order the lookup regime's IN pushdown
+    relies on), then swapped in leaf by leaf. The Spark jobs it runs
+    do not grow with the leaves it touches. The spill's home leaves come
+    from the meta (recorded by append_to_index); a spill without that
+    record (an interrupted append, or one written before records
+    existed) is read once to find them. signatures/ coalesces to one
+    file the same way, through iosafe.atomic_rewrite.
 
+    Read-invisible and replay-safe: readers see each leaf's old or new
+    data, and until the spill is removed — last — every spill row is
+    still served from it too (readers dedup ids and pairs), so a crash
+    at any point leaves the same answers and the next compaction
+    converges. Returns the number of leaves rewritten, 0 when there is
+    nothing to fold."""
     from .iosafe import adopt_orphans, atomic_rewrite
 
     meta = _load_meta(path)
     assert meta is not None, "compact_index needs the v2 layout"
     adopt_orphans(path)
-
-    def _files(d: str) -> list[str]:
-        return [f for f in os.listdir(d) if f.startswith("part-")]
-
-    def _rewrite(d: str, sort_col: str) -> None:
-        atomic_rewrite(spark.read.parquet(d).coalesce(1)
-                       .sortWithinPartitions(sort_col), d)
-
-    rewritten = 0
-    # fold the append spill into its home directories FIRST (r11 — the
-    # delta-spill design: appends write one batch-sized file per table;
-    # compaction moves those rows into the bucketed layout). Crash
-    # safety: the fold dedups rows (replayed appends write identical
-    # rows, and a crash between fold and spill-removal leaves rows
-    # duplicated across leaf+spill — every reader dedups candidates/ids
-    # anyway, and the next compaction converges because the fold is a
-    # distinct-union, not a blind append).
-    import shutil as _shutil
-
-    bands_spill = os.path.join(path, "bands_spill")
-    if os.path.isdir(bands_spill):
-        spill = spark.read.parquet(bands_spill).persist()
-        homes = spill.select("band_idx", "sbkt").distinct().collect()
-        for r in homes:
-            leaf = os.path.join(path, "bands", f"band_idx={r['band_idx']}",
-                                f"sbkt={r['sbkt']}")
-            rows = (spill.filter((F.col("band_idx") == r["band_idx"])
-                                 & (F.col("sbkt") == r["sbkt"]))
-                    .select("id", "band_sig"))
-            if os.path.isdir(leaf):
-                rows = rows.unionByName(
-                    spark.read.parquet(leaf).select("id", "band_sig"))
-            atomic_rewrite(rows.distinct().coalesce(1)
-                           .sortWithinPartitions("band_sig"), leaf)
-            rewritten += 1
-        spill.unpersist()
-        _shutil.rmtree(bands_spill, ignore_errors=True)
-    sets_spill = os.path.join(path, "sets_spill")
-    if os.path.isdir(sets_spill):
-        spill = spark.read.parquet(sets_spill).persist()
-        for r in spill.select("ibkt").distinct().collect():
-            leaf = os.path.join(path, "shingle_sets", f"ibkt={r['ibkt']}")
-            rows = (spill.filter(F.col("ibkt") == r["ibkt"])
-                    .select("id", "sh"))
-            if os.path.isdir(leaf):
-                rows = rows.unionByName(
-                    spark.read.parquet(leaf).select("id", "sh"))
-            atomic_rewrite(rows.dropDuplicates(["id"]).coalesce(1)
-                           .sortWithinPartitions("id"), leaf)
-            rewritten += 1
-        spill.unpersist()
-        _shutil.rmtree(sets_spill, ignore_errors=True)
-    for leaf in _glob.glob(os.path.join(path, "bands", "band_idx=*",
-                                        "sbkt=*")):
-        if len(_files(leaf)) > 1:
-            _rewrite(leaf, "band_sig")
-            rewritten += 1
-    for leaf in _glob.glob(os.path.join(path, "shingle_sets", "ibkt=*")):
-        if len(_files(leaf)) > 1:
-            _rewrite(leaf, "id")
-            rewritten += 1
+    homes = meta.get("spill_homes") or {}
+    rewritten = _fold(spark, path, meta, "bands", "bands_spill",
+                      ["band_idx", "sbkt"], "band_sig", "band_sig",
+                      homes.get("bands"))
+    rewritten += _fold(spark, path, meta, "shingle_sets", "sets_spill",
+                       ["ibkt"], "sh", "id", homes.get("sets"))
     sig_dir = os.path.join(path, "signatures")
-    if os.path.isdir(sig_dir) and len(_files(sig_dir)) > 1:
-        _rewrite(sig_dir, "id")
+    if len(_part_files(sig_dir)) > 1:
+        atomic_rewrite(_open(spark, path, "signatures", meta).coalesce(1)
+                       .sortWithinPartitions("id"), sig_dir)
         rewritten += 1
+    if "spill_homes" in meta:
+        del meta["spill_homes"]
+        _write_meta(path, **meta)
     return rewritten
+
+
+def _part_files(d: str) -> list[str]:
+    return ([f for f in os.listdir(d) if f.startswith("part-")]
+            if os.path.isdir(d) else [])
+
+
+def _fold(spark: SparkSession, path: str, meta: dict, table: str,
+          spill: str, keys: list[str], value: str, sort_col: str,
+          recorded: list | None) -> int:
+    """One table of :func:`compact_index`; returns the leaves rewritten.
+    An id's rows are md5-identical wherever it sits (leaf, spill, a
+    replayed append), so any row per (leaf, id) is exact."""
+    import glob
+    import shutil
+    from functools import reduce
+
+    from .iosafe import rewrite_leaves
+
+    root, spill_dir = os.path.join(path, table), os.path.join(path, spill)
+    cols = ["id", value, *keys]
+    leaves = {tuple(int(p.split("=", 1)[1])
+                    for p in os.path.relpath(d, root).split(os.sep))
+              for d in glob.glob(os.path.join(root, *[f"{k}=*" for k in keys]))
+              if len(_part_files(d)) > 1}
+    parts = []
+    if os.path.isdir(spill_dir):
+        parts.append(_open(spark, path, spill, meta).select(*cols))
+        if recorded is None:
+            recorded = parts[0].select(*keys).distinct().collect()
+        leaves |= {tuple(int(v) for v in h) for h in recorded}
+    if not leaves:
+        return 0
+    by_first: dict[int, list[int]] = {}
+    for h in leaves:
+        by_first.setdefault(h[0], []).extend(h[1:])
+    hit = F.lit(False)
+    for first, rest in by_first.items():
+        cond = F.col(keys[0]) == first
+        hit = hit | (cond & F.col(keys[1]).isin(rest) if rest else cond)
+    parts.append(_open(spark, path, table, meta).filter(hit).select(*cols))
+    rows = (reduce(DataFrame.unionByName, parts)
+            .repartition(*keys)
+            .dropDuplicates([*keys, "id"])  # clustered on keys: no 2nd shuffle
+            .sortWithinPartitions(*keys, sort_col))
+    done = rewrite_leaves(rows, root, keys)
+    shutil.rmtree(spill_dir, ignore_errors=True)  # last: until here it serves
+    return len(done)

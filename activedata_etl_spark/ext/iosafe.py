@@ -50,6 +50,15 @@ advisor's finding on this module's own first version:
    it is already held; ``adopt_orphans`` skips any name whose lock is
    held by a live writer. (Readers are never locked — they only ever
    see complete directories.)
+4. **Many leaves, one write**: :func:`rewrite_leaves` writes every leaf
+   of a partitioned table it rewrites in ONE distributed write into a
+   ``<name>.stage`` directory of the table's temp home, then moves each
+   written leaf into that leaf's own temp path (with a ``_SUCCESS``
+   marker: the stage's job committed, so each leaf is complete) and
+   swaps it in as above, one leaf at a time under the leaf's lock. A
+   crash mid-way leaves every leaf serving its old or its new data; a
+   ``.stage`` left behind is dropped by :func:`adopt_orphans` and a
+   moved leaf resolves like any other temp.
 """
 
 from __future__ import annotations
@@ -63,6 +72,7 @@ from pyspark.sql import DataFrame
 _TMP_DIR = "_rewrite_tmp"
 _OLD_SUFFIX = ".old"
 _LOCK_SUFFIX = ".lock"
+_STAGE_SUFFIX = ".stage"
 
 
 def _tmp_path(dest: str) -> str:
@@ -149,12 +159,18 @@ def atomic_rewrite(df: DataFrame, dest: str) -> None:
     tables rewrite LEAF BY LEAF (the caller passes each ``key=value``
     directory as ``dest``) — the partition value lives in the dirname,
     so a flat leaf rewrite preserves the partitioned layout exactly."""
+    _swap(dest, lambda tmp: df.write.mode("overwrite").parquet(tmp))
+
+
+def _swap(dest: str, fill) -> None:
+    """Under ``dest``'s writer lock: ``fill(tmp)`` makes the complete new
+    copy at the temp path, then the aside-rename swap puts it in."""
     tmp = _tmp_path(dest)
     old = tmp + _OLD_SUFFIX
     with _writer_lock(tmp + _LOCK_SUFFIX):
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
+        fill(tmp)
         if os.path.isdir(dest):
             os.rename(dest, old)  # atomic: dest vanishes whole, never partial
         os.rename(tmp, dest)
@@ -165,6 +181,44 @@ def atomic_rewrite(df: DataFrame, dest: str) -> None:
         os.rmdir(os.path.dirname(tmp))
     except OSError:
         pass  # another rewrite's temp still lives there
+
+
+def _leaves(root: str, depth: int) -> list[str]:
+    out = [root]
+    for _ in range(depth):
+        out = [os.path.join(d, n) for d in out for n in sorted(os.listdir(d))
+               if "=" in n and os.path.isdir(os.path.join(d, n))]
+    return out
+
+
+def rewrite_leaves(df: DataFrame, table: str, keys: list[str]) -> list[str]:
+    """Replace the leaves of the partitioned ``table`` (partitioned by
+    ``keys``) that ``df`` holds rows for, each with exactly those rows,
+    in ONE distributed write (module docstring #4). Leaves ``df`` has
+    no rows for are not touched. ``df`` should be clustered on ``keys``
+    so each leaf gets one file. Returns the destinations swapped."""
+    stage = os.path.join(table, _TMP_DIR, "leaves" + _STAGE_SUFFIX)
+    done = []
+    with _writer_lock(stage + _LOCK_SUFFIX):
+        shutil.rmtree(stage, ignore_errors=True)
+        df.write.mode("overwrite").partitionBy(*keys).parquet(stage)
+        for leaf in _leaves(stage, len(keys)):
+            dest = os.path.join(table, os.path.relpath(leaf, stage))
+            os.makedirs(os.path.dirname(dest), exist_ok=True)
+
+            def fill(tmp, leaf=leaf):
+                os.makedirs(os.path.dirname(tmp), exist_ok=True)
+                os.rename(leaf, tmp)
+                open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+            _swap(dest, fill)
+            done.append(dest)
+        shutil.rmtree(stage, ignore_errors=True)
+    try:
+        os.rmdir(os.path.dirname(stage))
+    except OSError:
+        pass
+    return done
 
 
 def adopt_orphans(root: str) -> int:
@@ -184,8 +238,16 @@ def adopt_orphans(root: str) -> int:
         home = os.path.join(dirpath, _TMP_DIR)
         entries = sorted(os.listdir(home))
         tombs = [n for n in entries if n.endswith(_OLD_SUFFIX)]
+        for name in entries:
+            # an interrupted one-write stage: what it had not yet moved
+            # out is never served; the rewrite reruns
+            if name.endswith(_STAGE_SUFFIX) and not _locked_by_live_writer(
+                    os.path.join(home, name + _LOCK_SUFFIX)):
+                shutil.rmtree(os.path.join(home, name), ignore_errors=True)
+                handled += 1
         temps = [n for n in entries
-                 if not n.endswith((_OLD_SUFFIX, _LOCK_SUFFIX))]
+                 if not n.endswith((_OLD_SUFFIX, _LOCK_SUFFIX,
+                                    _STAGE_SUFFIX))]
         for name in temps:
             if _locked_by_live_writer(os.path.join(home,
                                                    name + _LOCK_SUFFIX)):

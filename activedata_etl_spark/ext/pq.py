@@ -37,18 +37,20 @@ import os as _os
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..io import note_schema, open_stored
 from .similarity import _dvec
 
 
-def l2(a: Column, b: Column) -> Column:
-    """Squared L2 as a sequential in-order fold (IEEE-stable across
-    engines, like similarity.dot)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def l2(a: str, b: str) -> Column:
+    """Squared L2 of two array columns, named, as a sequential in-order
+    fold (IEEE-stable across engines, like similarity.dot). One SQL
+    string: the Column-builder form with its lambdas cost ~30 ms of
+    py4j round trips per plan."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) "
+        "* (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+        "0.0D, (acc, v) -> acc + v)")
 
 
 def rotate_expr(vec: Column, rot: list[list[float]]) -> Column:
@@ -90,6 +92,13 @@ def subvectors(df: DataFrame, id_col: str, vec_col: str,
     index list applied element-wise), zero extra shuffle."""
     assert dim % m == 0, f"dim {dim} not divisible by m {m}"
     sub = dim // m
+    slices = (f"posexplode(transform(sequence(0, {m - 1}), "
+              f"j -> slice(__v__, j * {sub} + 1, {sub}))) AS (j, sv)")
+    if rot is None and perm is None:
+        return (df.selectExpr(f"`{id_col}` AS id",
+                              f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+                              " AS __v__")
+                .selectExpr("id", slices))
     vec = _dvec(F.col(vec_col))
     if rot is not None:
         assert len(rot) == dim, f"rotation is {len(rot)}-row, dim {dim}"
@@ -108,11 +117,8 @@ def subvectors(df: DataFrame, id_col: str, vec_col: str,
     elif perm is not None:
         assert sorted(perm) == list(range(dim)), "perm must permute 0..dim-1"
         vec = F.array(*[F.element_at(vec, p + 1) for p in perm])
-    v = df.select(F.col(id_col).alias("id"), vec.alias("__v__"))
-    slices = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.slice("__v__", j * sub + 1, sub))
-    return (v.select("id", F.posexplode(slices).alias("j", "sv")))
+    return (df.select(F.col(id_col).alias("id"), vec.alias("__v__"))
+            .selectExpr("id", slices))
 
 
 def dim_permutation(df: DataFrame, id_col: str, vec_col: str,
@@ -262,7 +268,7 @@ def _assign(sv: DataFrame, codebook: DataFrame) -> DataFrame:
     _argmax_centroid r10 lesson: the exchange carries one row per
     (id, j) whatever ksub is)."""
     scored = (sv.join(F.broadcast(codebook), "j")
-              .withColumn("__d__", l2(F.col("sv"), F.col("cvec"))))
+              .withColumn("__d__", l2("sv", "cvec")))
     return (scored.groupBy("id", "j")
             .agg(F.min_by(F.struct(F.col("sv"), F.col("code")),
                           F.struct(F.col("__d__"), F.col("code")))
@@ -358,7 +364,7 @@ def _adc_topk(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
                      rot=rot).withColumnRenamed("id", "q_id")
     dtab = (qsv.join(F.broadcast(codebook), "j")
             .select("q_id", "j", "code",
-                    l2(F.col("sv"), F.col("cvec")).alias("d")))
+                    l2("sv", "cvec").alias("d")))
     if cand is not None:
         scored = (codes.join(cand, "id")
                   .join(F.broadcast(dtab), ["q_id", "j", "code"]))
@@ -367,10 +373,9 @@ def _adc_topk(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
                   .filter(F.col("q_id") != F.col("id")))
     scored = (scored
               .groupBy("q_id", "id")
-              .agg(F.aggregate(
-                  F.array_sort(F.collect_list(F.struct("j", "d"))),
-                  F.lit(0.0), lambda acc, s: acc + s["d"]).alias("adc"),
-                  F.count("*").alias("__nj__"))
+              .agg(F.expr("aggregate(array_sort(collect_list(struct(j, d))), "
+                          "0.0D, (acc, s) -> acc + s.d) AS adc"),
+                   F.count("*").alias("__nj__"))
               # only vectors matched in ALL m subspaces are comparable
               # (every encoded vector is; the guard is belt-and-braces)
               .filter(F.col("__nj__") == m).drop("__nj__"))
@@ -420,6 +425,41 @@ def _meta_path(path: str) -> str:
     return _os.path.join(path, "_pq_meta.json")
 
 
+def _load_meta(path: str) -> dict:
+    with open(_meta_path(path)) as f:
+        return _json.load(f)
+
+
+def _write_meta(path: str, meta: dict) -> None:
+    tmp = _meta_path(path) + ".tmp"
+    with open(tmp, "w") as f:
+        _json.dump(meta, f)
+    _os.replace(tmp, _meta_path(path))
+
+
+def _write(df: DataFrame, path: str, table: str, mode: str, meta: dict,
+           partition_cols=()) -> None:
+    """Write one table of the index and note its read schema in
+    ``meta`` (saved by the caller)."""
+    table_dir = _os.path.join(path, table)
+    replaces = mode == "overwrite" or not _os.path.isdir(table_dir)
+    w = df.write.mode(mode)
+    if partition_cols:
+        w = w.partitionBy(*partition_cols)
+    w.parquet(table_dir)
+    note_schema(meta.setdefault("schemas", {}), table, df, replaces,
+                partition_cols)
+
+
+def _open(spark, path: str, table: str, meta: dict | None = None) -> DataFrame:
+    """One table of the index, opened with the schema the meta records
+    (no Spark job); an index built before records existed infers it."""
+    if meta is None:
+        meta = _load_meta(path)
+    return open_stored(spark, _os.path.join(path, table),
+                       meta.get("schemas", {}).get(table))
+
+
 def build_pq_index(df: DataFrame, id_col: str, vec_col: str, path: str,
                    m: int = 4, ksub: int = 8, n_iter: int = 2,
                    dim: int = 64, train_fraction: float | None = None,
@@ -436,20 +476,19 @@ def build_pq_index(df: DataFrame, id_col: str, vec_col: str, path: str,
         if balance_dims else None
     codebook = pq_train(df, id_col, vec_col, m, ksub, n_iter, dim,
                         train_fraction=train_fraction, perm=perm, rot=rot)
-    codebook.write.mode("overwrite").parquet(_os.path.join(path, "codebook"))
-    pq_encode(df, id_col, vec_col, codebook, m, dim, perm=perm, rot=rot) \
-        .write.mode("overwrite").parquet(_os.path.join(path, "codes"))
-    with open(_meta_path(path), "w") as f:
-        _json.dump({"m": m, "ksub": ksub, "dim": dim, "perm": perm,
-                    "rot": rot}, f)
+    meta = {"m": m, "ksub": ksub, "dim": dim, "perm": perm, "rot": rot}
+    _write(codebook, path, "codebook", "overwrite", meta)
+    _write(pq_encode(df, id_col, vec_col, codebook, m, dim, perm=perm,
+                     rot=rot), path, "codes", "overwrite", meta)
+    _write_meta(path, meta)
 
 
 def read_pq_codebook(spark, path: str) -> DataFrame:
-    return spark.read.parquet(_os.path.join(path, "codebook"))
+    return _open(spark, path, "codebook")
 
 
 def read_pq_codes(spark, path: str) -> DataFrame:
-    return (spark.read.parquet(_os.path.join(path, "codes"))
+    return (_open(spark, path, "codes")
             .dropDuplicates(["id", "j"]))
 
 
@@ -457,12 +496,14 @@ def append_pq_codes(df_new: DataFrame, id_col: str, vec_col: str,
                     spark, path: str) -> None:
     """Incremental maintenance: encode NEW vectors against the FROZEN
     codebook and append — batch-sized work, no touch of stored codes."""
-    with open(_meta_path(path)) as f:
-        meta = _json.load(f)
-    cb = read_pq_codebook(spark, path)
-    pq_encode(df_new, id_col, vec_col, cb, meta["m"], meta["dim"],
-              perm=meta.get("perm"), rot=meta.get("rot")) \
-        .write.mode("append").parquet(_os.path.join(path, "codes"))
+    meta = _load_meta(path)
+    before = _json.dumps(meta)
+    cb = _open(spark, path, "codebook", meta)
+    _write(pq_encode(df_new, id_col, vec_col, cb, meta["m"], meta["dim"],
+                     perm=meta.get("perm"), rot=meta.get("rot")),
+           path, "codes", "append", meta)
+    if _json.dumps(meta) != before:
+        _write_meta(path, meta)
 
 
 def pq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
@@ -470,8 +511,7 @@ def pq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
     """ADC top-k answered from the index alone: the only corpus-sized
     read is the codes table (m small ints per vector — ~64× smaller
     than the raw embeddings); codebook and distance table broadcast."""
-    with open(_meta_path(path)) as f:
-        meta = _json.load(f)
+    meta = _load_meta(path)
     return _adc_topk(read_pq_codes(spark, path),
                      read_pq_codebook(spark, path), queries,
                      id_col, vec_col, k, meta["m"], meta["dim"],
@@ -504,10 +544,9 @@ def purge_pq_codes(spark, path: str, ids) -> int:
     from .iosafe import adopt_orphans, atomic_rewrite
 
     adopt_orphans(path)
-    with open(_meta_path(path)) as f:
-        meta = _json.load(f)
+    meta = _load_meta(path)
     codes_dir = _os.path.join(path, "codes")
-    codes = spark.read.parquet(codes_dir)
+    codes = _open(spark, path, "codes", meta)
     ids_df = ids.toDF("id") if isinstance(ids, _DF) else \
         spark.createDataFrame(
             [(i,) for i in ids],
@@ -530,7 +569,7 @@ def purge_pq_codes(spark, path: str, ids) -> int:
     rewritten = 0
     for cid in sorted(hit_cids):
         leaf = _os.path.join(codes_dir, f"cid={cid}")
-        shard = spark.read.parquet(leaf)
+        shard = open_stored(spark, leaf, meta.get("schemas", {}).get("codes"))
         atomic_rewrite(shard.join(F.broadcast(ids_df), "id", "left_anti"),
                        leaf)
         rewritten += 1
@@ -541,8 +580,7 @@ def purge_ivfpq_codes(spark, path: str, ids) -> int:
     """Explicit right-to-be-forgotten entry point for the IVF-PQ index
     (purge_pq_codes dispatches on the meta's ``nlist`` either way; this
     name asserts the caller's intent against the wrong index root)."""
-    with open(_meta_path(path)) as f:
-        meta = _json.load(f)
+    meta = _load_meta(path)
     assert "nlist" in meta, \
         f"{path} is a flat PQ index (no nlist in meta) — use purge_pq_codes"
     return purge_pq_codes(spark, path, ids)
@@ -628,19 +666,16 @@ def build_ivfpq_index(df: DataFrame, id_col: str, vec_col: str, path: str,
         if balance_dims else None
     codebook = pq_train(df, id_col, vec_col, m, ksub, n_iter, dim,
                         train_fraction=train_fraction, perm=perm, rot=rot)
-    cent.write.mode("overwrite").parquet(_os.path.join(path, "centroids"))
-    codebook.write.mode("overwrite").parquet(
-        _os.path.join(path, "codebook"))
+    meta = {"m": m, "ksub": ksub, "dim": dim, "nlist": nlist,
+            "perm": perm, "rot": rot}
+    _write(cent, path, "centroids", "overwrite", meta)
+    _write(codebook, path, "codebook", "overwrite", meta)
     codes = pq_encode(df, id_col, vec_col, codebook, m, dim, perm=perm,
                       rot=rot)
     cids = assign.select(F.col(id_col).alias("id"), "cid")
-    (codes.join(cids, "id")
-     .repartition("cid")
-     .write.mode("overwrite").partitionBy("cid")
-     .parquet(_os.path.join(path, "codes")))
-    with open(_meta_path(path), "w") as f:
-        _json.dump({"m": m, "ksub": ksub, "dim": dim,
-                    "nlist": nlist, "perm": perm, "rot": rot}, f)
+    _write(codes.join(cids, "id").repartition("cid"), path, "codes",
+           "overwrite", meta, ("cid",))
+    _write_meta(path, meta)
 
 
 def _route(queries: DataFrame, cent: DataFrame, id_col: str, vec_col: str,
@@ -664,18 +699,18 @@ def append_ivfpq_index(df_new: DataFrame, id_col: str, vec_col: str,
     """Route + encode NEW vectors against the FROZEN centroids and
     codebooks and append into their cid directories — batch-sized, no
     read of stored codes."""
-    with open(_meta_path(path)) as f:
-        meta = _json.load(f)
-    cent = spark.read.parquet(_os.path.join(path, "centroids"))
-    cb = read_pq_codebook(spark, path)
+    meta = _load_meta(path)
+    before = _json.dumps(meta)
+    cent = _open(spark, path, "centroids", meta)
+    cb = _open(spark, path, "codebook", meta)
     assign = _route(df_new, cent, id_col, vec_col, nprobe=1) \
         .withColumnRenamed("q_id", "id")
     codes = pq_encode(df_new, id_col, vec_col, cb, meta["m"], meta["dim"],
                       perm=meta.get("perm"), rot=meta.get("rot"))
-    (codes.join(assign, "id")
-     .repartition("cid")
-     .write.mode("append").partitionBy("cid")
-     .parquet(_os.path.join(path, "codes")))
+    _write(codes.join(assign, "id").repartition("cid"), path, "codes",
+           "append", meta, ("cid",))
+    if _json.dumps(meta) != before:
+        _write_meta(path, meta)
 
 
 def ivfpq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
@@ -687,13 +722,12 @@ def ivfpq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
     nprobe values, driver-bounded) and score those codes against the
     broadcast distance table. The untouched clusters' bytes are never
     opened — the inverted-file promise, done with directories."""
-    with open(_meta_path(path)) as f:
-        meta = _json.load(f)
-    cent = spark.read.parquet(_os.path.join(path, "centroids"))
-    cb = read_pq_codebook(spark, path)
+    meta = _load_meta(path)
+    cent = _open(spark, path, "centroids", meta)
+    cb = _open(spark, path, "codebook", meta)
     probes = _route(queries, cent, id_col, vec_col, nprobe).persist()
     cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
-    codes = (spark.read.parquet(_os.path.join(path, "codes"))
+    codes = (_open(spark, path, "codes", meta)
              .filter(F.col("cid").isin(cids) if cids else F.lit(False))
              .dropDuplicates(["id", "j"]))
     cand = (codes.select("id", "cid").dropDuplicates(["id"])

@@ -702,10 +702,6 @@ def quantized_cosine(qa: Column, qb: Column) -> Column:
 
 # --- persisted embedding index (quantized codes + band keys) -------------
 
-def _band_cols(n_bands: int) -> list[str]:
-    return [f"band_{b}" for b in range(n_bands)]
-
-
 def band_index_rows(df: DataFrame, id_col: str, vec_col: str,
                     n_bits: int = 16, n_bands: int = 4) -> DataFrame:
     """One index row per vector: id, int8 codes (+scale), float-sign band

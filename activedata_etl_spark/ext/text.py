@@ -33,10 +33,6 @@ def token_count(text) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def ngrams(toks: Column, n: int = 3) -> Column:
     """Word n-grams WITH duplicates (order-sensitive, for repetition
     scoring); `shingles` is the distinct-set variant for dedup.
@@ -261,17 +257,6 @@ _BPE_KEEP = 3
 # discipline as ext.graph._EDGE_CACHES (r9 advisor): list mutation
 # under the lock, unpersist() (JVM-side, thread-safe) outside it.
 _BPE_LOCK = threading.Lock()
-
-
-def release_bpe_caches() -> None:
-    """Unpersist vocab/winner caches from earlier :func:`bpe_merges`
-    calls (dropping them is a recompute, not a correctness hazard)."""
-    with _BPE_LOCK:
-        drained = list(_BPE_CACHES)
-        _BPE_CACHES.clear()
-    for group in drained:
-        for df in group:
-            df.unpersist()
 
 
 def _trim_bpe_caches() -> None:

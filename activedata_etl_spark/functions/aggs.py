@@ -229,14 +229,6 @@ def union_(col) -> Column:
     return F.array_sort(F.collect_set(_c(col)))
 
 
-def list_(col, order_by) -> Column:
-    """Ordered list of values per group (jx window ``List`` aggregate)."""
-    return F.transform(
-        F.array_sort(F.collect_list(F.struct(_c(order_by).alias("o"), _c(col).alias("v")))),
-        lambda s: s.getField("v"),
-    )
-
-
 def first_(value, order) -> Column:
     """First value in explicit encounter order. The reference's ``first``
     depends on document order; under parallelism that's only meaningful
@@ -338,12 +330,6 @@ STATS_DERIVED_SQL = [
     f"({_M3} / ({_VAR} * sqrt({_VAR}))) AS stat_skew",
     f"(({_M4} / ({_VAR} * {_VAR})) - 3.0) AS stat_kurtosis",
 ]
-
-
-def stats_struct(df_with_moments: DataFrame, keys: list[str]) -> DataFrame:
-    """Project moment columns into the full jx ``stats`` output."""
-    extras = [c for c in ["min", "max"] if c in df_with_moments.columns]
-    return df_with_moments.selectExpr(*keys, *extras, *STATS_DERIVED_SQL)
 
 
 def weighted_percentiles(df: DataFrame, keys: list[str], col: str,

@@ -45,15 +45,6 @@ def bloom_build(df: DataFrame, group_cols: list[str], value) -> DataFrame:
             .agg(F.expr("bit_or(m)").cast("bigint").alias("bits")))
 
 
-def bloom_merge(*tables: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Union filters (shards/days) — per-word bit_or, the Bloom union."""
-    out = tables[0]
-    for t in tables[1:]:
-        out = out.unionByName(t)
-    return (out.groupBy(*group_cols, "word")
-            .agg(F.expr("bit_or(bits)").cast("bigint").alias("bits")))
-
-
 def bloom_probe(filt: DataFrame, probes: DataFrame,
                 group_cols: list[str], key_col: str) -> DataFrame:
     """Membership test per probe key: ALL k bits set → maybe-present

@@ -11,6 +11,7 @@ date-partitioned layout replaces index rollover.
 from __future__ import annotations
 
 import os
+import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -70,6 +71,61 @@ def load_parquet(spark: SparkSession, path: str,
                 return _apply_bounds(base, bounds)
         return _apply_bounds(spark.read.parquet(path), bounds)
     return spark.read.parquet(path)
+
+
+def schema_record(df: DataFrame, partition_cols=()) -> str | None:
+    """DDL record of the schema a parquet read of ``df``'s files
+    returns, for the meta file of the store that writes them: the data
+    columns only. The partition columns are left out, so a read still
+    infers them from the directory names exactly as it would without a
+    record. DDL carries no nullability; a parquet read makes every
+    column nullable anyway. None (no record) when a nested field name or
+    a type would not survive the DDL round trip."""
+    from pyspark.sql.types import (ArrayType, MapType, StructType,
+                                   UserDefinedType)
+
+    def plain(t) -> bool:
+        if isinstance(t, StructType):
+            return all(re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", f.name) and
+                       plain(f.dataType) for f in t.fields)
+        if isinstance(t, ArrayType):
+            return plain(t.elementType)
+        if isinstance(t, MapType):
+            return plain(t.keyType) and plain(t.valueType)
+        return not isinstance(t, UserDefinedType)
+
+    fields = [f for f in df.schema.fields if f.name not in partition_cols]
+    if not all(plain(f.dataType) for f in fields):
+        return None
+    return ", ".join("`{}` {}".format(f.name.replace("`", "``"),
+                                      f.dataType.simpleString())
+                     for f in fields)
+
+
+def note_schema(schemas: dict, table: str, df: DataFrame, replaces: bool,
+                partition_cols=()) -> None:
+    """Update a store's ``{table: schema_record}`` map after writing
+    ``df`` to ``table``. ``replaces``: the write left only ``df``'s files
+    (an overwrite, or the table's first files). An append whose schema
+    differs from the record leaves a mixed table, which then reads by
+    inference, as it would without records."""
+    rec = schema_record(df, partition_cols)
+    if rec is not None and (replaces or schemas.get(table) == rec):
+        schemas[table] = rec
+    else:
+        schemas.pop(table, None)
+
+
+def open_stored(spark: SparkSession, path: str,
+                record: str | None = None) -> DataFrame:
+    """Open a parquet table the engine wrote. With its
+    :func:`schema_record` the open runs no Spark job, where schema
+    inference runs one to read a footer; without a record (a store
+    written before records existed, or one holding mixed schemas) it
+    reads as ``spark.read.parquet`` does."""
+    if record is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(record).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str,
@@ -368,10 +424,6 @@ def describe_columns_refresh(df: DataFrame,
 # name) entries keep table-specific normalization (events.ts); ("path",
 # p) entries are plain parquet dirs (register_parquet_table).
 _VIEW_SOURCES: dict[str, tuple] = {}
-
-
-def view_source(name: str) -> tuple | None:
-    return _VIEW_SOURCES.get(name)
 
 
 # Attached-index NAME → base directory, recorded by

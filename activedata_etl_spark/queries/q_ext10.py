@@ -265,7 +265,7 @@ def sim_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                   _dvec(F.col("embedding")).alias("__qv__"))
     scored = (v.crossJoin(F.broadcast(q))
               .filter(F.col("q_id") != F.col("id"))
-              .withColumn("__d__", PQ2.l2(F.col("__qv__"), F.col("__v__"))))
+              .withColumn("__d__", PQ2.l2("__qv__", "__v__")))
     w = Window.partitionBy("q_id").orderBy(F.col("__d__").asc(),
                                            F.col("id").asc())
     exact = (scored.withColumn("__rn__", F.row_number().over(w))

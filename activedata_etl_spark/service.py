@@ -263,6 +263,10 @@ def make_handler(spark, index_root: str | None = None):
         # HTTP/1.1 for Transfer-Encoding: chunked (the stream format);
         # every non-chunked response carries Content-Length, as required.
         protocol_version = "HTTP/1.1"
+        # TCP_NODELAY on each accepted socket: headers and body go out as
+        # separate writes, and with Nagle's algorithm a small body waited
+        # for the client's delayed ACK (~40 ms) on keep-alive connections
+        disable_nagle_algorithm = True
 
         def _send(self, code: int, payload: dict) -> None:
             body = json.dumps(payload, default=_default).encode()

@@ -20,8 +20,6 @@ Spark restatement:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -67,20 +65,46 @@ def stamp_provenance(df: DataFrame, source_key: str, id_col,
     return df.withColumn("etl", etl)
 
 
+#: Sidecar in a rollover root holding its read schema; the underscore
+#: keeps it out of Spark's file listing.
+ROLLOVER_SCHEMA = "_graft_schema.ddl"
+
+
 def rollover_write(df: DataFrame, path: str, date_col: str, unit: str = "day") -> None:
     """Date-partitioned parquet write = the rollover index.
 
     Dynamic partition overwrite keeps re-runs idempotent per period —
     the Spark analog of routing docs into per-week indexes and replacing
-    re-ETL'd blocks by `_id`.
+    re-ETL'd blocks by `_id`. The read schema goes to the
+    ``ROLLOVER_SCHEMA`` sidecar so :func:`read_rollover` opens the store
+    without a Spark job. A store that already held rows without a
+    sidecar, or with another schema, keeps (or gets) none: it may mix
+    schemas, so it reads by inference as before.
     """
-    (
-        df.withColumn("__period__", F.date_trunc(unit, F.col(date_col)).cast("date"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__period__")
-        .parquet(path)
-    )
+    import os
+
+    from ..io import note_schema
+
+    side = os.path.join(path, ROLLOVER_SCHEMA)
+    schemas = {}
+    if os.path.isfile(side):
+        with open(side) as f:
+            schemas["rollover"] = f.read()
+    fresh = not os.path.isdir(path)
+    out = df.withColumn("__period__",
+                        F.date_trunc(unit, F.col(date_col)).cast("date"))
+    (out.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("__period__")
+     .parquet(path))
+    if fresh or schemas:
+        note_schema(schemas, "rollover", out, fresh, ("__period__",))
+    if "rollover" in schemas:
+        with open(side + ".tmp", "w") as f:
+            f.write(schemas["rollover"])
+        os.replace(side + ".tmp", side)
+    elif os.path.isfile(side):
+        os.remove(side)
 
 
 def read_rollover(spark: SparkSession, path: str,
@@ -89,32 +113,23 @@ def read_rollover(spark: SparkSession, path: str,
     'only open indexes overlapping the where-clause time range'
     (pyLibrary/env/rollover_index.py). The filter is on the partition
     column so only matching directories are scanned (PartitionFilters in
-    the plan; asserted in tests)."""
-    df = spark.read.parquet(path)
+    the plan; asserted in tests). The open itself runs no Spark job when
+    the store carries its schema sidecar."""
+    import os
+
+    from ..io import open_stored
+
+    side = os.path.join(path, ROLLOVER_SCHEMA)
+    rec = None
+    if os.path.isfile(side):
+        with open(side) as f:
+            rec = f.read()
+    df = open_stored(spark, path, rec)
     if start:
         df = df.filter(F.col("__period__") >= start)
     if end:
         df = df.filter(F.col("__period__") < end)
     return df
-
-
-def transform_pipeline(spark: SparkSession, source_path: str,
-                       transform: Callable[[DataFrame], DataFrame],
-                       dest_path: str, source_key: str, id_col,
-                       date_col: str | None = None) -> DataFrame:
-    """read → transform → provenance stamp → (partitioned) write.
-
-    One reference worker (``transforms/*.py :: process``) becomes one call;
-    chains compose by pointing the next stage's source at ``dest_path``.
-    Returns the written frame for inspection/testing.
-    """
-    df = transform(spark.read.parquet(source_path))
-    out = stamp_provenance(df, source_key, id_col)
-    if date_col:
-        rollover_write(out, dest_path, date_col)
-    else:
-        out.write.mode("overwrite").parquet(dest_path)
-    return out
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str],

@@ -133,7 +133,7 @@ def recall_at_k(spark, emb, m, ksub, balance, rotation=None):
     w = Window.partitionBy("q_id").orderBy(F.col("d").asc(),
                                            F.col("id").asc())
     exact = (q.crossJoin(c).filter(F.col("q_id") != F.col("id"))
-             .withColumn("d", l2(F.col("qv"), F.col("cv")))
+             .withColumn("d", l2("qv", "cv"))
              .withColumn("rn", F.row_number().over(w))
              .filter(F.col("rn") <= K).select("q_id", "id"))
     hits = (got.withColumnRenamed("vec_id", "id")

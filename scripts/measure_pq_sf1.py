@@ -66,7 +66,7 @@ def exact_l2_topk(emb, qs, k):
     c = emb.select(F.col("vec_id").alias("id"),
                    _dvec(F.col("embedding")).alias("cv"))
     scored = (q.crossJoin(c).filter(F.col("q_id") != F.col("id"))
-              .withColumn("d", l2(F.col("qv"), F.col("cv"))))
+              .withColumn("d", l2("qv", "cv")))
     w = Window.partitionBy("q_id").orderBy(F.col("d").asc(),
                                            F.col("id").asc())
     return (scored.withColumn("rn", F.row_number().over(w))

@@ -400,14 +400,12 @@ def test_rewrite_is_single_writer(spark, tmp_path):
 
 
 def test_observed_sizing_metric_sees_all_rows(spark):
-    """Pin the Spark contract the one-barrier sizing path rides on
-    (ADVICE r12, dedup_index.pairs_against_index): an ``Observation``
-    placed BELOW a ``groupBy().agg().limit(k).collect()`` must count
-    EVERY input row, even when the limit truncates the grouped output
-    — the shuffle map stage forces full input consumption. If a future
-    Spark version pushes the limit across the partial aggregate, this
-    test (and the in-code exhaustive-group-sum assert it backs) is the
-    tripwire before the regime gate silently misroutes."""
+    """Pin the Spark contract that an ``Observation`` placed BELOW a
+    ``groupBy().agg().limit(k).collect()`` counts EVERY input row, even
+    when the limit truncates the grouped output — the shuffle map stage
+    forces full input consumption. Sizing that rides a truncating
+    action on an observed count relies on this; the index's delta query
+    now observes a full (noop) pass over its staged delta instead."""
     from pyspark.sql import Observation
 
     df = (spark.range(0, 10_000)
@@ -429,3 +427,121 @@ def test_observed_sizing_metric_sees_all_rows(spark):
              .limit(200).collect())
     assert len(rows2) == 97
     assert int(obs2.get["n"]) == 10_000 == sum(int(r["__n__"]) for r in rows2)
+
+
+def _build_and_spill(spark, sf_dir, idx, **kw):
+    docs = _docs(spark, sf_dir, n=300)
+    DI.build_index(docs.filter(F.col("doc_id") % 3 == 0), "doc_id", "text",
+                   idx, **PARAMS, **kw)
+    DI.append_to_index(docs.filter(F.col("doc_id") % 3 == 1), "doc_id",
+                       "text", idx, **PARAMS)
+    return docs
+
+
+def test_compact_jobs_do_not_grow_with_leaves(spark, sf_dir, tmp_path):
+    """compact_index rewrites each table in one distributed write, so the
+    Spark jobs it runs are the same at 4 and at 16 signature buckets (16
+    and 64 band leaves); it returns the leaves it rewrote, then 0."""
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (4, 16):
+        idx = str(tmp_path / f"idx{n}")
+        _build_and_spill(spark, sf_dir, idx, n_sig_buckets=n)
+        group = f"compact-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            rewritten = DI.compact_index(spark, idx)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert rewritten > n  # the spill lands in more leaves than bands
+        assert DI.compact_index(spark, idx) == 0
+    assert jobs[4] == jobs[16], jobs
+
+
+def test_pairs_against_same_after_appending_the_batch(spark, sf_dir,
+                                                      tmp_path):
+    """The ingest order appends a batch and then checks it: the delta's
+    own rows, now also in the index, must not change its pairs."""
+    idx = str(tmp_path / "idx")
+    docs = _docs(spark, sf_dir, n=300)
+    DI.build_index(docs.filter(F.col("doc_id") % 3 != 1), "doc_id", "text",
+                   idx, **PARAMS)
+    delta = docs.filter(F.col("doc_id") % 3 == 1)
+
+    def pairs():
+        return _pairs_set(DI.pairs_against_index(
+            delta, "doc_id", "text", spark, idx, threshold=THRESHOLD,
+            **PARAMS))
+
+    before = pairs()
+    DI.append_to_index(delta, "doc_id", "text", idx, **PARAMS)
+    assert pairs() == before and before
+    DI.compact_index(spark, idx)
+    assert pairs() == before
+
+
+def test_crash_mid_multi_leaf_swap_converges(spark, sf_dir, tmp_path,
+                                             monkeypatch):
+    """A compaction that dies after swapping some leaves of a table:
+    every leaf serves its old or its new rows, the spill (removed last)
+    still serves the rest, answers are unchanged, and the next
+    compaction converges."""
+    import glob as _glob
+    import os as _os
+
+    import pytest
+
+    from activedata_etl_spark.ext import iosafe
+
+    idx = str(tmp_path / "idx")
+    _build_and_spill(spark, sf_dir, idx, n_sig_buckets=4)
+    before = _pairs_set(DI.near_dup_pairs_from_index(spark, idx, THRESHOLD))
+    leaves = sorted(_glob.glob(_os.path.join(idx, "bands", "band_idx=*",
+                                             "sbkt=*")))
+
+    def rows(leaf):
+        return {tuple(r) for r in spark.read.parquet(leaf)
+                .select("id", "band_sig").collect()}
+
+    old = {leaf: rows(leaf) for leaf in leaves}
+    spill = spark.read.parquet(_os.path.join(idx, "bands_spill"))
+    added = {}
+    for r in spill.collect():
+        leaf = _os.path.join(idx, "bands", f"band_idx={r['band_idx']}",
+                             f"sbkt={r['sbkt']}")
+        added.setdefault(leaf, set()).add((r["id"], r["band_sig"]))
+
+    real_swap, calls = iosafe._swap, []
+
+    def dying_swap(dest, fill):
+        calls.append(dest)
+        if len(calls) == 3:
+            raise RuntimeError("crash mid-swap")
+        real_swap(dest, fill)
+
+    monkeypatch.setattr(iosafe, "_swap", dying_swap)
+    with pytest.raises(RuntimeError, match="crash mid-swap"):
+        DI.compact_index(spark, idx)
+    monkeypatch.setattr(iosafe, "_swap", real_swap)
+
+    swapped = 0
+    for leaf in leaves:
+        got = rows(leaf)
+        new = old[leaf] | added.get(leaf, set())
+        assert got in (old[leaf], new), leaf
+        swapped += got != old[leaf]
+    assert swapped == 2
+    assert _os.path.isdir(_os.path.join(idx, "bands_spill"))
+    assert _pairs_set(DI.near_dup_pairs_from_index(spark, idx,
+                                                   THRESHOLD)) == before
+
+    assert DI.compact_index(spark, idx) > 0
+    assert not _os.path.isdir(_os.path.join(idx, "bands_spill"))
+    assert not _glob.glob(_os.path.join(idx, "**", "_rewrite_tmp"),
+                          recursive=True)
+    for leaf in leaves:
+        assert rows(leaf) == old[leaf] | added.get(leaf, set())
+    assert _pairs_set(DI.near_dup_pairs_from_index(spark, idx,
+                                                   THRESHOLD)) == before
+    assert DI.compact_index(spark, idx) == 0

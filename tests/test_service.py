@@ -1568,3 +1568,31 @@ def test_index_build_verb_roundtrip(spark, sf_dir, tmp_path):
             assert ei.value.code in (400, 500), bad
     finally:
         server.shutdown()
+
+
+def test_accepted_socket_has_nodelay(spark, sf_dir):
+    """Small responses must not wait for a delayed ACK: the handler
+    turns Nagle's algorithm off on every accepted socket."""
+    import socket
+
+    seen = []
+    server = serve(spark, sf_dir, port=0)
+    base = server.RequestHandlerClass
+
+    class Probe(base):
+        def setup(self):
+            super().setup()
+            seen.append(self.connection.getsockopt(socket.IPPROTO_TCP,
+                                                   socket.TCP_NODELAY))
+
+    server.RequestHandlerClass = Probe
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    try:
+        with urllib.request.urlopen(
+                f"http://127.0.0.1:{server.server_address[1]}/") as r:
+            r.read()
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert seen and all(seen)
