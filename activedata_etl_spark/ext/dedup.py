@@ -93,21 +93,22 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str,
     The repartition matters twice: it spreads the md5/shingle compute
     across all cores even when the source is a single small file, and it
     pre-partitions on the id so the downstream signature groupBy needs no
-    second shuffle (Exchange reuse).
-    """
-    spread = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-                            F.col(id_col))
-    staged, elems = _staged_elems(spread, text_col, shingle_n,
-                                  keep=[F.col(id_col)])
-    return staged.select(F.col(id_col), F.explode(elems).alias("__s__"))
+    second shuffle (Exchange reuse). The rows are :func:`shingle_rows_sql`
+    over ``df``."""
+    return df.sparkSession.sql(
+        shingle_rows_sql(id_col, text_col, shingle_n,
+                         df.sparkSession.sparkContext.defaultParallelism),
+        df=df)
 
 
 def shingle_rows_sql(id_col: str, text_col: str, shingle_n: int | None,
                      parallelism: int) -> str:
-    """:func:`shingle_table` as SQL over a ``{df}`` argument of
-    ``spark.sql``: the same plan, for callers that build a whole
-    statement on top of it in one py4j round trip instead of dozens
-    (test_index_matches_direct_pipeline pins the two as equal)."""
+    """The :func:`shingle_table` rows as SQL over a ``{df}`` argument of
+    ``spark.sql``, for callers that build a whole statement on top of it
+    in one py4j round trip. The token array is its own projection below
+    the n-gram slices, so the tokenizer regex runs once per row (see
+    :func:`_staged_elems`); tokens and n-grams match text.tokens and
+    text.shingles."""
     ident = f"`{id_col}`"
     if shingle_n:
         ln = f"size(__tk0__) - {shingle_n - 1}"

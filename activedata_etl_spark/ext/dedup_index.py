@@ -39,11 +39,8 @@ Layout versioning: a v2 index carries ``graft_index_meta.json`` recording
 the bucket counts; indexes built before r10 lack it and are served by the
 legacy full-scan path (still correct — rebuild to get the seek shape).
 The meta also records each table's read schema (``schemas``), so opening
-a table runs no Spark job, and the leaves the unfolded append spill lands
-in (``spill_homes``), so compaction need not read the spill to find them.
-Either record may be missing (an index written before it existed, an
-interrupted append); readers and compaction then fall back to reading
-the data, as before.
+a table runs no Spark job; an index written before the record existed
+(or holding mixed schemas) is opened by inference, as before.
 """
 
 from __future__ import annotations
@@ -334,11 +331,10 @@ def append_to_index(df_new: DataFrame, id_col: str, text_col: str, path: str,
     ``bands_spill/`` and ``sets_spill/`` with the bucket keys as
     ordinary columns (readers union the spill with the bucketed layout;
     :func:`compact_index` folds it into its home directories), so an
-    append's file count is O(1) whatever the bucket count. The same
-    writes observe the doc count (``n_docs``, which sizes the delta
-    query's regimes; a replayed batch double-counts, which only nudges
-    a threshold) and the spill's home directories, which compaction
-    reads back from the meta. Appending to a v1 index (no meta) keeps
+    append's file count is O(1) whatever the bucket count. The
+    signatures write observes the doc count (``n_docs``, which sizes
+    the delta query's regimes; a replayed batch double-counts, which
+    only nudges a threshold). Appending to a v1 index (no meta) keeps
     its legacy layout: no bands/ table, flat shingle sets."""
     from pyspark.sql import Observation
 
@@ -355,35 +351,19 @@ def append_to_index(df_new: DataFrame, id_col: str, text_col: str, path: str,
             stage.select("id", "sh").write.mode("append").parquet(
                 os.path.join(path, "shingle_sets"))
             return
-        spilled = any(os.path.isdir(os.path.join(path, t))
-                      for t in ("bands_spill", "sets_spill"))
-        known = (meta.get("spill_homes") if spilled
-                 else {"bands": [], "sets": []})
-        # until this append's homes are recorded, the spill's homes are
-        # unknown: an interrupted append leaves compaction to find them
-        meta["spill_homes"] = None
-        _write_meta(path, **meta)
         n_obs = Observation()
         sig = _signatures(stage)
         (sig.observe(n_obs, F.count(F.lit(1)).alias("n"))
          .write.mode("append").parquet(os.path.join(path, "signatures")))
         schemas = meta.setdefault("schemas", {})
         note_schema(schemas, "signatures", sig, False)
-        for table, rows, sort_col, keys in (
-                ("bands_spill", _band_rows(stage, meta), "band_sig",
-                 ["band_idx", "sbkt"]),
-                ("sets_spill", _set_rows(stage, meta), "id", ["ibkt"])):
+        for table, rows, sort_col in (
+                ("bands_spill", _band_rows(stage, meta), "band_sig"),
+                ("sets_spill", _set_rows(stage, meta), "id")):
             fresh = not os.path.isdir(os.path.join(path, table))
-            obs = Observation()
-            (rows.observe(obs, F.collect_set(F.array(*keys)).alias("h"))
-             .coalesce(1).sortWithinPartitions(sort_col)
+            (rows.coalesce(1).sortWithinPartitions(sort_col)
              .write.mode("append").parquet(os.path.join(path, table)))
             note_schema(schemas, table, rows, fresh)
-            if known is not None:
-                kind = table.split("_")[0]
-                known[kind] = sorted({tuple(h) for h in known[kind]}
-                                     | {tuple(h) for h in obs.get["h"]})
-        meta["spill_homes"] = known
         meta["n_docs"] = int(meta.get("n_docs", 0)) + int(n_obs.get["n"])
         _write_meta(path, **meta)
     finally:
@@ -400,35 +380,32 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
     normalized (id_a < id_b) so output matches a full-corpus run.
 
     The delta is staged once (:func:`_stage`, persisted): its band rows,
-    its shingle sets and the sizing all read that one frame. The action
-    that materializes the stage observes the delta's doc count (every
-    doc has ``n_bands`` band rows), and the candidate stage is ADAPTIVE
-    on it:
+    its shingle sets and the sizing all read that one frame. The one
+    sizing action materializes the stage, counts the delta's band rows
+    and lists its distinct band keys up to ``_LOOKUP_CAP + 1``.
 
-    - **lookup regime** (≤ ``_LOOKUP_CAP`` delta band rows — the "is
-      this batch already in the corpus" shape): the band keys are
-      collected from the stage and pushed as literal predicates on the
-      stored band read. ``band_sig
+    - **lookup** (≤ ``_LOOKUP_CAP`` distinct delta band keys — the "is
+      this batch already in the corpus" shape): the listed keys are
+      pushed as literal predicates on the stored band read. ``band_sig
       IN (...)`` skips row groups of the band_sig-sorted files; the
       ``(band_idx, sbkt)`` OR-chain prunes directories too, but every
       surviving row evaluates the whole chain, so it is added only when
       the keys hit at most ``_LOOKUP_DIR_BUDGET`` of the directories.
-    - **batch regime** (a nightly delta): thousands of band keys hit
-      every bucket, so the stored band table is scanned once unfiltered
-      (it is ~1% of corpus bytes — the scan IS the floor).
-    - **bulk regime** (delta band rows above ``_BULK_FRACTION`` of the
-      stored ones — a re-dedup, not an ingest): candidate ids approach
-      the corpus, so restricting the verify buys nothing and staged
-      barriers would serialize what one lazy plan pipelines; one lazy
-      plan runs off the stored tables.
+    - otherwise thousands of band keys hit every bucket, so the stored
+      band table is scanned once unfiltered (it is ~1% of corpus bytes
+      — the scan IS the floor).
 
-    In the lookup and batch regimes the distinct candidate pairs are
-    limit-collected at ``_SEEK_CAP + 1``: when they and their ids fit,
-    the verify reads stored shingle sets by pushed ``ibkt``/``id IN``
-    predicates and pairs them with the broadcast candidates in one
-    shuffle (:func:`_verify_listed`); otherwise it semi-joins the
-    stored sets to the candidate ids. Either way the verify never
-    shuffles the corpus' shingle arrays.
+    The distinct candidate pairs are then limit-collected at
+    ``_SEEK_CAP + 1``: the verify's cost follows how many candidates a
+    delta has, not how big it is. When they and their ids fit, the sets
+    of those ids are collected (stored ones by pushed ``ibkt``/``id
+    IN`` predicates) and the pairs verified on the driver
+    (:func:`_verify_on_driver`). When they do not, a **bulk** delta
+    (band rows above ``_BULK_FRACTION`` of the stored ones — a
+    re-dedup, not an ingest), whose candidate ids approach the corpus,
+    joins the candidates to all stored sets in one lazy plan; any other
+    semi-joins the stored sets to the candidate ids first, so its verify
+    never shuffles the corpus' shingle arrays.
 
     Under plan-only probes the sizing is skipped (explain must execute
     nothing) and the lazy bulk-shaped plan is returned."""
@@ -452,36 +429,44 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
 
     stage.persist()  # sets_new reads it too
     banded_new = _band_rows(stage, meta)
+    # Sizing is ONE driver action in every regime, and it materializes
+    # the stage: the distinct band keys are limit-collected at
+    # _LOOKUP_CAP + 1, and an Observation BELOW the groupBy counts every
+    # band row (the shuffle map stage consumes all input even when the
+    # limit truncates — test_observed_sizing_metric_sees_all_rows pins
+    # that contract). Untruncated, the collect holds the lookup keys.
     obs = Observation()
-    (stage.observe(obs, F.count(F.lit(1)).alias("n"))
-     .write.format("noop").mode("overwrite").save())
-    n_delta_bands = int(obs.get["n"]) * n_bands  # n_bands rows per doc
+    grouped = (banded_new.observe(obs, F.expr("count(1) AS n"))
+               .groupBy("band_idx", "sbkt", "band_sig")
+               .agg(F.expr("count(1) AS __n__"))
+               .limit(_LOOKUP_CAP + 1).collect())
+    n_delta_bands = int(obs.get["n"])
+    in_lookup = len(grouped) <= _LOOKUP_CAP
+    # untruncated, the groups are exhaustive: if their counts ever stop
+    # summing to the observed total, the Observation no longer sees
+    # every row and the regime gates below would misroute
+    if in_lookup:
+        assert n_delta_bands == sum(int(r["__n__"]) for r in grouped), (
+            "observed band-row count diverged from the exhaustive group "
+            f"sum ({n_delta_bands} observed)")
     stored_bands_total = meta.get("n_docs", 0) * meta["n_bands"]
-    if (stored_bands_total and
-            n_delta_bands > _BULK_FRACTION * stored_bands_total):
-        cands = _cross_pairs(banded_new, _read_bands(spark, path, meta))
-        sets_ = (sets_new.unionByName(read_shingle_sets(spark, path))
-                 .dropDuplicates(["id"]))
-        return _materialize_release(
-            _verify_jaccard(cands, sets_, threshold), stage)
+    bulk = bool(stored_bands_total
+                and n_delta_bands > _BULK_FRACTION * stored_bands_total)
     stored_b = _read_bands(spark, path, meta)
-    if n_delta_bands <= _LOOKUP_CAP:
-        keys = {tuple(r) for r in banded_new.select(
-            "band_idx", "sbkt", "band_sig").collect()}
+    if in_lookup:
+        keys = [(r["band_idx"], r["sbkt"], r["band_sig"]) for r in grouped]
         n_dirs = int(meta["sbkt"]) * int(meta["n_bands"])
         hit: dict[tuple[int, int], list[str]] = {}
         for bi, bk, sig in keys:
             hit.setdefault((bi, bk), []).append(sig)
         if len(hit) <= max(1, int(n_dirs * _LOOKUP_DIR_BUDGET)):
-            prune = F.lit(False)
-            for (bi, bk), sigs in hit.items():
-                prune = prune | ((F.col("band_idx") == bi)
-                                 & (F.col("sbkt") == bk)
-                                 & F.col("band_sig").isin(sigs))
-            stored_b = stored_b.filter(prune)
+            stored_b = stored_b.filter(" OR ".join(
+                f"(band_idx = {int(bi)} AND sbkt = {int(bk)} AND "
+                f"band_sig IN ({_in_list(sigs)}))"
+                for (bi, bk), sigs in hit.items()))
         else:
             stored_b = stored_b.filter(
-                F.col("band_sig").isin([sig for _, _, sig in keys]))
+                f"band_sig IN ({_in_list([sig for _, _, sig in keys])})")
     cands = (_cross_pairs(banded_new, stored_b)
              .selectExpr("*", *[_bucket(f"id_{s}", meta["ibkt"])
                                 + f" AS ibkt_{s}" for s in "ab"])
@@ -489,25 +474,28 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
     listed = cands.limit(_SEEK_CAP + 1).collect()
     ids = {r[k] for r in listed for k in ("id_a", "id_b")}
     stored_sets = _read_sets_with_ibkt(spark, path, meta)
-    if len(listed) <= _SEEK_CAP and len(ids) <= _SEEK_CAP:
-        ibkts = sorted({r[k] for r in listed for k in ("ibkt_a", "ibkt_b")})
-        stored_sets = (stored_sets
-                       .filter(F.col("ibkt").isin(ibkts) if ibkts
-                               else F.lit(False))
-                       .filter(F.col("id").isin(list(ids)) if ids
-                               else F.lit(False)))
-        out = _verify_listed(
-            cands.select("id_a", "id_b"),
-            sets_new.unionByName(stored_sets.select("id", "sh")), threshold)
-    else:
-        cand_ids = (cands.select(F.col("id_a").alias("id"))
-                    .unionByName(cands.select(F.col("id_b").alias("id")))
-                    .distinct())
-        sets_ = (sets_new.join(cand_ids, "id", "left_semi")
-                 .unionByName(stored_sets.join(cand_ids, "id", "left_semi")
-                              .select("id", "sh"))
+    id_type = stage.schema["id"].dataType.simpleString()
+    if (len(listed) <= _SEEK_CAP and len(ids) <= _SEEK_CAP
+            and all(_literal(i) is not None for i in ids)):
+        out = _verify_on_driver(
+            spark, listed, sets_new, stored_sets, id_type, threshold)
+        stage.unpersist()
+        cands.unpersist()
+        return out
+    if bulk:
+        sets_ = (sets_new.unionByName(read_shingle_sets(spark, path))
                  .dropDuplicates(["id"]))
-        out = _verify_jaccard(cands.select("id_a", "id_b"), sets_, threshold)
+        return _materialize_release(
+            _verify_jaccard(cands.select("id_a", "id_b"), sets_, threshold),
+            stage, cands)
+    cand_ids = (cands.select(F.col("id_a").alias("id"))
+                .unionByName(cands.select(F.col("id_b").alias("id")))
+                .distinct())
+    sets_ = (sets_new.join(cand_ids, "id", "left_semi")
+             .unionByName(stored_sets.join(cand_ids, "id", "left_semi")
+                          .select("id", "sh"))
+             .dropDuplicates(["id"]))
+    out = _verify_jaccard(cands.select("id_a", "id_b"), sets_, threshold)
     return _materialize_release(out, stage, cands)
 
 
@@ -538,26 +526,62 @@ def _verify_jaccard(cands: DataFrame, sets_: DataFrame,
         threshold)
 
 
-def _verify_listed(cands: DataFrame, sets_: DataFrame,
-                   threshold: float) -> DataFrame:
-    """Exact Jaccard of a candidate set known to be small (it was
-    listed on the driver, so it is the broadcast side) in ONE shuffle:
-    each set row meets the pairs it belongs to on either side, and
-    grouping by the pair brings both sets together. An id may appear in
-    ``sets_`` more than once (delta ∪ spill ∪ leaf); its rows are
-    md5-identical, so the first non-null set per side is exact."""
-    none = "CAST(NULL AS {})".format(sets_.schema["sh"].dataType.simpleString())
-    sides = [sets_.join(F.broadcast(cands.withColumnRenamed(f"id_{s}", "id")),
-                        "id")
-             .selectExpr(f"id AS id_{s}", f"id_{o}", f"sh AS sh_{s}",
-                         f"{none} AS sh_{o}")
-             for s, o in (("a", "b"), ("b", "a"))]
-    j = (sides[0].unionByName(sides[1])
-         .groupBy("id_a", "id_b")
-         .agg(F.expr("first(sh_a, true) AS sh_a"),
-              F.expr("first(sh_b, true) AS sh_b"))
-         .filter("sh_a IS NOT NULL AND sh_b IS NOT NULL"))
-    return _jaccard(j, threshold)
+def _literal(v) -> str | None:
+    """``v`` as a Spark SQL literal: ints and strings, the id types an
+    index holds; None for anything else."""
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    if isinstance(v, str):
+        return "'{}'".format(v.replace("\\", "\\\\").replace("'", "\\'"))
+    return None
+
+
+def _in_list(values) -> str:
+    return ", ".join(_literal(v) for v in values)
+
+
+def _verify_on_driver(spark: SparkSession, listed: list, sets_new: DataFrame,
+                      stored_sets: DataFrame, id_type: str,
+                      threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs listed on the driver: the sets
+    of their ids come back in ONE collect (the delta's from the staged
+    frame, the stored ones read through pushed ``ibkt``/``id IN``
+    predicates), the pairs are scored here with the arithmetic of
+    :func:`_jaccard`, and the answer is a local relation, so reading it
+    runs no Spark job. An id may have several set rows (delta, spill,
+    leaf); they are md5-identical, so any one is exact."""
+    ids = {r[k] for r in listed for k in ("id_a", "id_b")}
+    sets: dict = {}
+    if ids:
+        in_ids = f"id IN ({_in_list(ids)})"
+        ibkts = sorted({int(r[k]) for r in listed
+                        for k in ("ibkt_a", "ibkt_b")})
+        stored = stored_sets.filter(
+            f"ibkt IN ({', '.join(map(str, ibkts))}) AND {in_ids}")
+        for i, sh in (sets_new.filter(in_ids)
+                      .unionByName(stored.select("id", "sh")).collect()):
+            sets.setdefault(i, sh)
+    out = []
+    for r in listed:
+        a, b = sets.get(r["id_a"]), sets.get(r["id_b"])
+        if a is None or b is None:
+            continue
+        # size(array_intersect(a, b)) / (size(a) + size(b) - inter)
+        inter = len(set(a) & set(b))
+        den = len(a) + len(b) - inter
+        if den and inter / den >= threshold:
+            out.append((r["id_a"], r["id_b"], inter / den))
+    cols = (f"CAST(id_a AS {id_type}) AS id_a, "
+            f"CAST(id_b AS {id_type}) AS id_b, jaccard")
+    if not out:
+        return spark.sql(f"SELECT {cols} FROM VALUES "
+                         "(NULL, NULL, CAST(0 AS DOUBLE)) "
+                         "AS t(id_a, id_b, jaccard) WHERE false")
+    # a double's repr parses back to the same double
+    rows = ", ".join(f"({_literal(a)}, {_literal(b)}, "
+                     f"CAST('{jac!r}' AS DOUBLE))" for a, b, jac in out)
+    return spark.sql(f"SELECT {cols} FROM VALUES {rows} "
+                     "AS t(id_a, id_b, jaccard)")
 
 
 def _jaccard(j: DataFrame, threshold: float) -> DataFrame:
@@ -665,11 +689,9 @@ def compact_index(spark: SparkSession, path: str) -> int:
     leaf key, sorted within each leaf on its seek column (band_sig /
     id — the row-group-stats order the lookup regime's IN pushdown
     relies on), then swapped in leaf by leaf. The Spark jobs it runs
-    do not grow with the leaves it touches. The spill's home leaves come
-    from the meta (recorded by append_to_index); a spill without that
-    record (an interrupted append, or one written before records
-    existed) is read once to find them. signatures/ coalesces to one
-    file the same way, through iosafe.atomic_rewrite.
+    do not grow with the leaves it touches; the spill's home leaves are
+    listed from the spill itself (batch-sized). signatures/ coalesces
+    to one file through iosafe.atomic_rewrite.
 
     Read-invisible and replay-safe: readers see each leaf's old or new
     data, and until the spill is removed — last — every spill row is
@@ -682,20 +704,15 @@ def compact_index(spark: SparkSession, path: str) -> int:
     meta = _load_meta(path)
     assert meta is not None, "compact_index needs the v2 layout"
     adopt_orphans(path)
-    homes = meta.get("spill_homes") or {}
     rewritten = _fold(spark, path, meta, "bands", "bands_spill",
-                      ["band_idx", "sbkt"], "band_sig", "band_sig",
-                      homes.get("bands"))
+                      ["band_idx", "sbkt"], "band_sig", "band_sig")
     rewritten += _fold(spark, path, meta, "shingle_sets", "sets_spill",
-                       ["ibkt"], "sh", "id", homes.get("sets"))
+                       ["ibkt"], "sh", "id")
     sig_dir = os.path.join(path, "signatures")
     if len(_part_files(sig_dir)) > 1:
         atomic_rewrite(_open(spark, path, "signatures", meta).coalesce(1)
                        .sortWithinPartitions("id"), sig_dir)
         rewritten += 1
-    if "spill_homes" in meta:
-        del meta["spill_homes"]
-        _write_meta(path, **meta)
     return rewritten
 
 
@@ -705,8 +722,7 @@ def _part_files(d: str) -> list[str]:
 
 
 def _fold(spark: SparkSession, path: str, meta: dict, table: str,
-          spill: str, keys: list[str], value: str, sort_col: str,
-          recorded: list | None) -> int:
+          spill: str, keys: list[str], value: str, sort_col: str) -> int:
     """One table of :func:`compact_index`; returns the leaves rewritten.
     An id's rows are md5-identical wherever it sits (leaf, spill, a
     replayed append), so any row per (leaf, id) is exact."""
@@ -725,9 +741,8 @@ def _fold(spark: SparkSession, path: str, meta: dict, table: str,
     parts = []
     if os.path.isdir(spill_dir):
         parts.append(_open(spark, path, spill, meta).select(*cols))
-        if recorded is None:
-            recorded = parts[0].select(*keys).distinct().collect()
-        leaves |= {tuple(int(v) for v in h) for h in recorded}
+        leaves |= {tuple(int(v) for v in h)
+                   for h in parts[0].select(*keys).distinct().collect()}
     if not leaves:
         return 0
     by_first: dict[int, list[int]] = {}

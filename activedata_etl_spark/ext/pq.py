@@ -373,12 +373,14 @@ def _adc_topk(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
                   .filter(F.col("q_id") != F.col("id")))
     scored = (scored
               .groupBy("q_id", "id")
-              .agg(F.expr("aggregate(array_sort(collect_list(struct(j, d))), "
-                          "0.0D, (acc, s) -> acc + s.d) AS adc"),
-                   F.count("*").alias("__nj__"))
+              .agg(F.expr("array_sort(collect_set(struct(j, d))) AS __jd__"))
               # only vectors matched in ALL m subspaces are comparable
-              # (every encoded vector is; the guard is belt-and-braces)
-              .filter(F.col("__nj__") == m).drop("__nj__"))
+              # (every encoded vector is; the guard is belt-and-braces).
+              # A replayed append stores a vector's (j, code) rows twice;
+              # the set holds them once, so codes need no dedup first.
+              .filter(f"size(__jd__) = {int(m)}")
+              .selectExpr("q_id", "id", "aggregate(__jd__, 0.0D, "
+                          "(acc, s) -> acc + s.d) AS adc"))
     w = Window.partitionBy("q_id").orderBy(F.col("adc").asc(),
                                            F.col("id").asc())
     return (scored.withColumn("__rn__", F.row_number().over(w))
@@ -417,8 +419,9 @@ def pq_topk(df: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
 # vectors are encoded against the frozen codebooks and appended —
 # retraining per batch would silently re-key every stored code. Codes
 # are a pure function of (payload, codebook), so at-least-once replay
-# appends byte-identical rows that the (id, j) dedupe on read collapses
-# — the standing index-family convention (ahash/band precedent).
+# appends byte-identical rows that readers collapse (read_pq_codes'
+# (id, j) dedupe; ADC scoring's per-vector set) — the standing
+# index-family convention (ahash/band precedent).
 
 
 def _meta_path(path: str) -> str:
@@ -512,8 +515,8 @@ def pq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
     read is the codes table (m small ints per vector — ~64× smaller
     than the raw embeddings); codebook and distance table broadcast."""
     meta = _load_meta(path)
-    return _adc_topk(read_pq_codes(spark, path),
-                     read_pq_codebook(spark, path), queries,
+    return _adc_topk(_open(spark, path, "codes", meta),
+                     _open(spark, path, "codebook", meta), queries,
                      id_col, vec_col, k, meta["m"], meta["dim"],
                      perm=meta.get("perm"), rot=meta.get("rot"))
 

@@ -403,9 +403,11 @@ def test_observed_sizing_metric_sees_all_rows(spark):
     """Pin the Spark contract that an ``Observation`` placed BELOW a
     ``groupBy().agg().limit(k).collect()`` counts EVERY input row, even
     when the limit truncates the grouped output — the shuffle map stage
-    forces full input consumption. Sizing that rides a truncating
-    action on an observed count relies on this; the index's delta query
-    now observes a full (noop) pass over its staged delta instead."""
+    forces full input consumption. ``pairs_against_index`` sizes its
+    regimes in one such action (and asserts the exhaustive group sum
+    when the limit does not truncate); if a future Spark version pushes
+    the limit across the partial aggregate, this test is the tripwire
+    before the regime gate silently misroutes."""
     from pyspark.sql import Observation
 
     df = (spark.range(0, 10_000)
@@ -545,3 +547,30 @@ def test_crash_mid_multi_leaf_swap_converges(spark, sf_dir, tmp_path,
     assert _pairs_set(DI.near_dup_pairs_from_index(spark, idx,
                                                    THRESHOLD)) == before
     assert DI.compact_index(spark, idx) == 0
+
+
+def test_driver_verify_matches_distributed_verify(spark, sf_dir, tmp_path,
+                                                  monkeypatch):
+    """Listed candidates are verified on the driver and served as a local
+    relation; its pairs equal the distributed verify's bit for bit,
+    string ids with a quote and a backslash in them included."""
+    docs = _docs(spark, sf_dir, n=400)
+    key = F.concat(F.lit("it's\\"), F.col("doc_id").cast("string"))
+    old = docs.filter(F.col("doc_id") % 20 != 1).withColumn("doc_id", key)
+    new = docs.filter(F.col("doc_id") % 20 == 1).withColumn("doc_id", key)
+    idx = str(tmp_path / "idx")
+    DI.build_index(old, "doc_id", "text", idx, **PARAMS)
+
+    def run():
+        out = DI.pairs_against_index(new, "doc_id", "text", spark, idx,
+                                     threshold=THRESHOLD, **PARAMS)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return {tuple(r) for r in out.collect()}, out.schema, plan
+
+    on_driver, schema, plan = run()
+    assert "LocalRelation" in plan
+    monkeypatch.setattr(DI, "_SEEK_CAP", 0)  # force the semi-join verify
+    distributed, schema2, plan2 = run()
+    assert "LocalRelation" not in plan2
+    assert on_driver == distributed and on_driver
+    assert [f.dataType for f in schema] == [f.dataType for f in schema2]
