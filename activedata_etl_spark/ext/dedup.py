@@ -23,14 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-# plan-only mode (set by plans/query.run(plan_only=True) — the service's
-# format=explain probe): _materialize_release must NOT run the eager
-# localCheckpoint, or an explain on a prefix-filter op would execute the
-# entire pairwise join at DataFrame-construction time AND return an
-# opaque checkpoint-scan instead of the real plan. The flag lives in
-# planmode (shared with the default-edge-domain frequency probe).
-from ..planmode import plan_only  # noqa: F401  (re-export, used by plans)
-from ..planmode import is_plan_only as _is_plan_only
+from ..staging import release, stage
 from .text import fingerprint, shingles, tokens
 
 
@@ -180,35 +173,6 @@ def band_keys_sql(n_hashes: int = 16, n_bands: int = 4) -> list[str]:
 FANOUT_BUCKET_LIMIT = 256
 
 
-def _scratch_materialize(df: DataFrame, kind: str) -> DataFrame:
-    """Materialize a multi-consumer intermediate to SCRATCH PARQUET and
-    return a reader over it (guide §5/§6) — the disk-bounded alternative
-    to ``.persist()`` for intermediates too large to pin against
-    executor memory at corpus scale. Written fresh on every call
-    (mkdtemp, never existence-cached): each query invocation recomputes
-    the intermediate from its inputs; only the consumers within that
-    invocation share the materialization. Leftover directories from
-    dead sessions are swept age-gated, mirroring scratch_dir's rule."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    prefix = f"spark_graft_{kind}_"
-    tmp = tempfile.gettempdir()
-    cutoff = time.time() - 24 * 3600
-    for d in glob.glob(os.path.join(tmp, prefix + "*")):
-        try:
-            if os.path.getmtime(d) < cutoff:
-                shutil.rmtree(d, ignore_errors=True)
-        except OSError:
-            pass
-    path = os.path.join(tempfile.mkdtemp(prefix=prefix), "data")
-    df.write.parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def bounded_bucket_pairs(banded: DataFrame, keys: list[str],
                          limit: int = FANOUT_BUCKET_LIMIT) -> DataFrame:
     """Every unordered in-bucket member pair, exactly once per bucket,
@@ -234,8 +198,8 @@ def bounded_bucket_pairs(banded: DataFrame, keys: list[str],
     broadcast: by the adversarial-bucket assumption it is tiny, and on a
     normal corpus it is EMPTY, so the anti-join passes everything to the
     cold leg untouched and the hot leg's stages scan zero rows. Callers
-    whose ``banded`` is expensive to recompute must stage it (persist or
-    scratch write) — this helper references it three times.
+    whose ``banded`` is expensive to recompute must stage it — this
+    helper references it three times.
 
     Measured-and-rejected alternative (r14): sizing via a count WINDOW
     over the same (keys) partitioning — no count job, no broadcast —
@@ -248,13 +212,11 @@ def bounded_bucket_pairs(banded: DataFrame, keys: list[str],
     bench-scale artifact; the window form's extra member shuffles grow
     with the corpus.
     """
-    # the hot-key table is persisted: it is tiny by construction, has
-    # two consumers (the anti and semi splits below), and each
-    # materialization's broadcast builds then scan a few cached rows
-    # instead of re-running the count aggregate (the same multi-consumer
-    # persist rationale as the callers' canon tables)
-    hot_keys = (banded.groupBy(*keys).count()
-                .filter(F.col("count") > limit).select(*keys).persist())
+    # the hot-key table is staged: it is tiny by construction, has two
+    # consumers (the anti and semi splits below), and each broadcast
+    # build then scans a few cached rows instead of re-running the count
+    hot_keys = stage(banded.groupBy(*keys).count()
+                     .filter(F.col("count") > limit).select(*keys), "memory")
     hot = F.broadcast(hot_keys)
     cold = banded.join(hot, keys, "left_anti")
     buckets = (cold.groupBy(*keys)
@@ -322,7 +284,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
         # (id, bands) is ~150 B/doc, the natural stage boundary; on a
         # cluster this is the signature table the pipeline would write
         # to storage anyway (see near_dup_pairs' docstring).
-        bsdf = bsdf.persist()
+        bsdf = stage(bsdf, "memory")
         banded = bsdf.select(F.struct("id", "bs").alias("m"),
                              F.posexplode("bs").alias("band_idx", "band_sig"))
         pairs = bounded_bucket_pairs(banded, ["band_idx", "band_sig"],
@@ -477,14 +439,14 @@ def near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                    verify: str = "arrays") -> DataFrame:
     """End-to-end near-dup pipeline with shared intermediates:
 
-        shingles (persisted) → minhash signatures → LSH bands →
+        shingles (memory stage) → minhash signatures → LSH bands →
         candidate pairs → exact-Jaccard verify
 
     The shingle table feeds both signature computation and the verify
-    stage; persisting it avoids recomputing the tokenize/shingle scan 4×.
-    On a cluster against 100 TB, swap ``persist()`` for writing the
-    signature/shingle tables to storage (they're ~1% of corpus size) —
-    the plan shape is identical.
+    stage; staging it avoids recomputing the tokenize/shingle scan 4×.
+    On a cluster against 100 TB, stage it on disk instead (the
+    signature/shingle tables are ~1% of corpus size) — the plan shape
+    is identical.
 
     ``verify`` picks the Jaccard stage: ``"arrays"`` attaches both docs'
     shingle-set arrays per pair (fastest — measured 2.8× over counts at
@@ -494,7 +456,7 @@ def near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     partial-aggregated count — same values, bounded per-ROW memory, for
     corpora whose individual shingle sets are themselves huge.
     """
-    sh = shingle_table(df, id_col, text_col, shingle_n).persist()
+    sh = stage(shingle_table(df, id_col, text_col, shingle_n), "memory")
     sig = minhash_table(df, id_col, text_col, n_hashes, shingle_n, sh=sh)
     cands = lsh_candidate_pairs(df, id_col, text_col, n_hashes, n_bands,
                                 shingle_n, sig=sig,
@@ -645,31 +607,32 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     (a correctness guard, not a truncation: partial labels would silently
     split clusters).
     """
-    edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-             .union(pairs.select(F.col("id_b").alias("src"),
-                                 F.col("id_a").alias("dst")))
-             .distinct().persist())
-    # Each round MUST truncate lineage (localCheckpoint), not just cache:
-    # persist() keeps the logical plan, and a self-referencing join per
-    # round makes Catalyst re-analyze an exponentially growing tree (a
-    # 10-round chain OOMs the driver). On a cluster with a checkpoint dir,
-    # prefer df.checkpoint() — same truncation, executor-failure-safe.
-    labels = (edges.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=True))
+    edges = stage(pairs.select(F.col("id_a").alias("src"),
+                               F.col("id_b").alias("dst"))
+                  .union(pairs.select(F.col("id_b").alias("src"),
+                                      F.col("id_a").alias("dst")))
+                  .distinct(), "memory")
+    # Each round MUST truncate lineage (a checkpoint stage), not just
+    # cache: persist() keeps the logical plan, and a self-referencing
+    # join per round makes Catalyst re-analyze an exponentially growing
+    # tree (a 10-round chain OOMs the driver). A round's labels are read
+    # only by the next round, so each round releases its predecessor.
+    labels = stage(edges.select(F.col("src").alias("node"))
+                   .distinct()
+                   .withColumn("label", F.col("node")), "checkpoint")
     try:
         for _ in range(max_iter):
             prop = (edges.join(labels, edges.dst == labels.node)
                     .groupBy("src").agg(F.min("label").alias("nbr_min")))
-            new_labels = (
+            new_labels = stage(
                 labels.join(prop, labels.node == prop.src, "left")
                 .select(labels.node,
-                        F.least(labels.label, F.col("nbr_min")).alias("label"))
-            ).localCheckpoint(eager=True)
+                        F.least(labels.label, F.col("nbr_min")).alias("label")),
+                "checkpoint")
             changed = (new_labels.alias("n")
                        .join(labels.alias("o"), "node")
                        .filter(F.col("n.label") < F.col("o.label")).count())
+            release(labels)
             labels = new_labels
             if changed == 0:
                 return labels.select(F.col("node").alias("id"),
@@ -677,7 +640,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         raise RuntimeError(
             f"connected_components: not converged after {max_iter} rounds")
     finally:
-        edges.unpersist()
+        release(edges)
 
 
 def canonical_filter(df: DataFrame, pairs: DataFrame, id_col: str,
@@ -711,7 +674,7 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     sweep of a small eval set against a huge corpus, use the broadcast
     shingle join (text_decontamination) instead.
     """
-    sh = shingle_table(df, id_col, text_col, shingle_n).persist()
+    sh = stage(shingle_table(df, id_col, text_col, shingle_n), "memory")
     sig = minhash_table(df, id_col, text_col, n_hashes, shingle_n, sh=sh)
     cands = lsh_candidate_pairs(df, id_col, text_col, n_hashes, n_bands,
                                 shingle_n, sig=sig)
@@ -1217,36 +1180,6 @@ def winnowing_delta_pairs(spark, path: str, delta: DataFrame,
             .filter(F.col("shared") >= min_shared))
 
 
-def _materialize_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Eagerly materialize a pair-table-sized result onto executor block
-    storage (localCheckpoint — distributed, NOT a driver collect), then
-    unpersist the cached intermediates. The prefix-filter ops are
-    reachable per-request through the jx service (prefix_filter_pairs /
-    prefix_filter_join), so leaving their element/prefix caches pinned
-    would accumulate CacheManager entries across HTTP requests in a
-    long-lived service; releasing here keeps each request's storage
-    footprint request-scoped while downstream clauses still compose
-    against the checkpointed result.
-
-    Under :func:`plan_only` (the service's format=explain probe) the
-    eager checkpoint is SKIPPED and the lazy plan returned as-is — an
-    explain must not execute the pairwise join, and the plan it reports
-    should be the real one, not a checkpoint scan. The intermediates'
-    persist marks are still released (persist() is lazy, so nothing was
-    materialized; unpersisting keeps explain probes from accumulating
-    CacheManager entries)."""
-    if _is_plan_only():
-        out = result
-    else:
-        out = result.localCheckpoint(eager=True)
-    for c in cached:
-        try:
-            c.unpersist()
-        except Exception:
-            pass
-    return out
-
-
 def prefix_filter_pairs(df: DataFrame, id_col: str, text_col: str,
                         threshold: float = 0.5,
                         shingle_n: int | None = 3,
@@ -1288,9 +1221,13 @@ def prefix_filter_pairs(df: DataFrame, id_col: str, text_col: str,
     """
     cand, tok, pref = prefix_candidates(df, id_col, text_col, threshold,
                                         shingle_n, pair_bound=pair_bound)
-    return _materialize_release(
-        jaccard_pairs_counts(cand, tok, "__id__", threshold=float(threshold)),
-        tok, pref)
+    # the pair table is checkpointed (distributed, not a driver
+    # collect), so the element and prefix stages can go before return
+    out = stage(jaccard_pairs_counts(cand, tok, "__id__",
+                                     threshold=float(threshold)),
+                "checkpoint")
+    release(tok, pref)
+    return out
 
 
 def prefix_candidates(df: DataFrame, id_col: str, text_col: str,
@@ -1335,24 +1272,15 @@ def prefix_candidates(df: DataFrame, id_col: str, text_col: str,
     # so (id, element) rows are unique by construction — a dedup shuffle
     # here would be pure waste. The repartition spreads the explode
     # across cores at materialization time (the source is a handful of
-    # parquet files).
-    #
-    # r14 (VERDICT r13 #6, guide §5/§6): the staging moved from
-    # .persist() to a SCRATCH PARQUET write — the executor-memory cache
-    # pinned the full token explode (the largest intermediate of the
-    # prefix family) against execution memory, unbounded at corpus
-    # scale; the parquet materialization is disk-bounded, each consumer
-    # is an ordinary pruned scan, and it is exactly the token table a
-    # 100 TB pipeline writes anyway. Written fresh per invocation
-    # (mkdtemp — never existence-cached, so every bench/oracle
-    # invocation recomputes from its inputs); stale siblings from dead
-    # sessions are age-swept like scratch_dir's.
+    # parquet files). tok is the largest intermediate of the prefix
+    # family, so it is a DISK stage: disk-bounded at corpus scale, each
+    # consumer an ordinary pruned scan, written fresh per invocation.
     par = df.sparkSession.sparkContext.defaultParallelism
     staged, elems = _staged_elems(df.repartition(par, F.col(id_col)),
                                   text_col, shingle_n,
                                   keep=[F.col(id_col).alias("__id__")])
     tok = staged.select("__id__", F.explode(elems).alias("__s__"))
-    tok = _scratch_materialize(tok, "preftok")
+    tok = stage(tok, "disk")
     pref = _prefix_rows(tok, t)
     a = pref.select(F.col("__id__").alias("id_a"), F.col("n").alias("n_a"),
                     F.col("__pos__").alias("__pa__"), "__s__")
@@ -1458,7 +1386,7 @@ def prefix_filter_join(left: DataFrame, right: DataFrame, id_col: str,
         return staged.select("__id__", F.explode(elems).alias("__s__"),
                              F.lit(tag).alias("__t__"))
 
-    tok = side(left, "L").unionByName(side(right, "R")).persist()
+    tok = stage(side(left, "L").unionByName(side(right, "R")), "memory")
     pref = _prefix_rows(tok, t, tags=("__t__",))
     a = (pref.filter(F.col("__t__") == "L")
          .select(F.col("__id__").alias("left_id"), F.col("n").alias("n_a"),
@@ -1479,10 +1407,11 @@ def prefix_filter_join(left: DataFrame, right: DataFrame, id_col: str,
         cand.withColumnRenamed("left_id", "id_a")
             .withColumnRenamed("right_id", "id_b"),
         tok.select("__id__", "__s__"), "__id__", threshold=t)
-    return _materialize_release(
-        ver.select(F.col("id_a").alias("left_id"),
-                   F.col("id_b").alias("right_id"), "jaccard"),
-        tok, pref)
+    out = stage(ver.select(F.col("id_a").alias("left_id"),
+                           F.col("id_b").alias("right_id"), "jaccard"),
+                "checkpoint")
+    release(tok, pref)
+    return out
 
 
 def _prefix_rows(tok: DataFrame, t: float,
@@ -1492,18 +1421,18 @@ def _prefix_rows(tok: DataFrame, t: float,
     position, prefix filter pos <= n - ceil(t*n) + 1 with the one-sided
     1e-9 relaxation (FP wobble may only LENGTHEN the prefix — extra
     candidates, killed by exact verify — never drop a qualifying pair).
-    Persisted: both sides of every candidate self-join read it."""
+    A memory stage: both sides of every candidate self-join read it."""
     sizes = tok.groupBy("__id__", *tags).agg(F.count(F.lit(1)).alias("n"))
     dfreq = tok.groupBy("__s__").agg(F.count(F.lit(1)).alias("__df__"))
-    return (tok.join(dfreq, "__s__")
+    pref = (tok.join(dfreq, "__s__")
             .withColumn("__pos__", F.row_number().over(
                 Window.partitionBy("__id__")
                 .orderBy(F.col("__df__").asc(), F.col("__s__").asc())))
             .join(sizes, ["__id__", *tags])
             .filter(F.col("__pos__")
                     <= F.col("n") - F.ceil(F.col("n") * F.lit(t) - 1e-9) + 1)
-            .select("__id__", *tags, "__s__", "n", "__pos__", "__df__")
-            .persist())
+            .select("__id__", *tags, "__s__", "n", "__pos__", "__df__"))
+    return stage(pref, "memory")
 
 
 def append_element_index(df: DataFrame, id_col: str, text_col: str,
@@ -1555,7 +1484,7 @@ def prefix_join_index_delta(spark, path: str, delta: DataFrame,
                        F.col("s").alias("__s__"))
                .dropDuplicates()
                .withColumn("__t__", F.lit("S")))
-    tok = new_tok.unionByName(old_tok).persist()
+    tok = stage(new_tok.unionByName(old_tok), "memory")
     pref = _prefix_rows(tok, t, tags=("__t__",))
     d = pref.filter(F.col("__t__") == "D").select(
         F.col("__id__").alias("id_d"), F.col("n").alias("n_d"),
@@ -1586,10 +1515,10 @@ def prefix_join_index_delta(spark, path: str, delta: DataFrame,
                          >= o_req_dd))
               .select(F.col("id_d").alias("id_a"), "id_b"))
     cand = cross.unionByName(within).distinct()
-    return _materialize_release(
-        jaccard_pairs_counts(cand, tok.select("__id__", "__s__"),
-                             "__id__", threshold=t),
-        tok, pref)
+    out = stage(jaccard_pairs_counts(cand, tok.select("__id__", "__s__"),
+                                     "__id__", threshold=t), "checkpoint")
+    release(tok, pref)
+    return out
 
 
 # --- stable-order prefix-filter index (r7) -------------------------------
@@ -2061,17 +1990,19 @@ def prefix_join_stable_delta(spark, path: str, order_path: str,
                .drop("epoch"))
         stale = (stored_sets.filter(F.col("epoch") != F.lit(epoch))
                  .drop("epoch"))
-        all_sets = (delta_sets.unionByName(cur)
-                    .unionByName(_resolve_unseen(stale, order))
-                    .persist())  # consumed by BOTH pair-join legs
-        return _materialize_release(
-            jaccard_pairs_positional(cand, all_sets, t), all_sets)
+        all_sets = stage(delta_sets.unionByName(cur)
+                         .unionByName(_resolve_unseen(stale, order)),
+                         "memory")  # consumed by BOTH pair-join legs
+        out = stage(jaccard_pairs_positional(cand, all_sets, t),
+                    "checkpoint")
+        release(all_sets)
+        return out
     tok_all = (new_pos.select("id", "s")
                .unionByName(stored.select("id", "s"))
                .select(F.col("id").alias("__id__"), F.col("s").alias("__s__")))
     verify_fn = jaccard_pairs_ids if verify == "ids" else jaccard_pairs_counts
-    return _materialize_release(
-        verify_fn(cand, tok_all, "__id__", threshold=t))
+    return stage(verify_fn(cand, tok_all, "__id__", threshold=t),
+                 "checkpoint")
 
 
 def prefix_order_staleness(spark, path: str, order_path: str) -> DataFrame:

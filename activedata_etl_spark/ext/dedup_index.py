@@ -51,6 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io import note_schema, open_stored
+from ..staging import is_plan_only, release, stage
 from .dedup import band_keys_sql, minhash_minima_sql, shingle_rows_sql
 
 # Bucket-count CAPS for the size-adaptive layout (raised from 32, r11
@@ -187,7 +188,7 @@ def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
     shingle sets under ``path``.
 
     One scan of the corpus feeds everything: the staged per-doc rows
-    (:func:`_stage`) are persisted and written three ways, and the
+    (:func:`_stage`) are staged in memory and written three ways, and the
     signatures write counts the indexed docs through an Observation.
     Band keys are stored denormalized so candidate generation later is
     a pure read, no hashing, and already exploded into ``(band_idx,
@@ -200,11 +201,11 @@ def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
     meta = {"layout": 2, "n_hashes": n_hashes, "n_bands": n_bands,
             "shingle_n": shingle_n}
     schemas = meta["schemas"] = {}
-    stage = _stage(df, id_col, text_col, n_hashes, n_bands,
-                   shingle_n).persist()
+    corpus = stage(_stage(df, id_col, text_col, n_hashes, n_bands,
+                          shingle_n), "memory")
     try:
         obs = Observation()
-        sig = _signatures(stage)
+        sig = _signatures(corpus)
         (sig.observe(obs, F.count(F.lit(1)).alias("n"))
          .write.mode("overwrite").parquet(os.path.join(path, "signatures")))
         note_schema(schemas, "signatures", sig, True)
@@ -214,14 +215,14 @@ def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
         auto_s, auto_i = _auto_buckets(meta["n_docs"], n_bands)
         meta["sbkt"] = int(n_sig_buckets) if n_sig_buckets else auto_s
         meta["ibkt"] = int(n_set_buckets) if n_set_buckets else auto_i
-        bands = _band_rows(stage, meta)
+        bands = _band_rows(corpus, meta)
         (bands
          .repartition("band_idx", "sbkt")
          .sortWithinPartitions("band_sig")  # row-group stats → IN-pushdown seeks
          .write.mode("overwrite").partitionBy("band_idx", "sbkt")
          .parquet(os.path.join(path, "bands")))
         note_schema(schemas, "bands", bands, True, ("band_idx", "sbkt"))
-        sets_ = _set_rows(stage, meta)
+        sets_ = _set_rows(corpus, meta)
         (sets_
          .repartition("ibkt")
          .sortWithinPartitions("id")  # row-group stats → IN-pushdown seeks
@@ -230,7 +231,7 @@ def build_index(df: DataFrame, id_col: str, text_col: str, path: str,
         note_schema(schemas, "shingle_sets", sets_, True, ("ibkt",))
         _write_meta(path, **meta)
     finally:
-        stage.unpersist()
+        release(corpus)
 
 
 def read_signatures(spark: SparkSession, path: str) -> DataFrame:
@@ -342,24 +343,24 @@ def append_to_index(df_new: DataFrame, id_col: str, text_col: str, path: str,
     if meta is not None:
         assert (meta["n_hashes"], meta["n_bands"]) == (n_hashes, n_bands), \
             "index built with different n_hashes/n_bands"
-    stage = _stage(df_new, id_col, text_col, n_hashes, n_bands,
-                   shingle_n).persist()
+    delta = stage(_stage(df_new, id_col, text_col, n_hashes, n_bands,
+                         shingle_n), "memory")
     try:
         if meta is None:
-            _signatures(stage).write.mode("append").parquet(
+            _signatures(delta).write.mode("append").parquet(
                 os.path.join(path, "signatures"))
-            stage.select("id", "sh").write.mode("append").parquet(
+            delta.select("id", "sh").write.mode("append").parquet(
                 os.path.join(path, "shingle_sets"))
             return
         n_obs = Observation()
-        sig = _signatures(stage)
+        sig = _signatures(delta)
         (sig.observe(n_obs, F.count(F.lit(1)).alias("n"))
          .write.mode("append").parquet(os.path.join(path, "signatures")))
         schemas = meta.setdefault("schemas", {})
         note_schema(schemas, "signatures", sig, False)
         for table, rows, sort_col in (
-                ("bands_spill", _band_rows(stage, meta), "band_sig"),
-                ("sets_spill", _set_rows(stage, meta), "id")):
+                ("bands_spill", _band_rows(delta, meta), "band_sig"),
+                ("sets_spill", _set_rows(delta, meta), "id")):
             fresh = not os.path.isdir(os.path.join(path, table))
             (rows.coalesce(1).sortWithinPartitions(sort_col)
              .write.mode("append").parquet(os.path.join(path, table)))
@@ -367,7 +368,7 @@ def append_to_index(df_new: DataFrame, id_col: str, text_col: str, path: str,
         meta["n_docs"] = int(meta.get("n_docs", 0)) + int(n_obs.get["n"])
         _write_meta(path, **meta)
     finally:
-        stage.unpersist()
+        release(delta)
 
 
 def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
@@ -379,7 +380,7 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
     tokenized; the corpus side is the stored band table. Pair order is
     normalized (id_a < id_b) so output matches a full-corpus run.
 
-    The delta is staged once (:func:`_stage`, persisted): its band rows,
+    The delta is staged once (:func:`_stage`, in memory): its band rows,
     its shingle sets and the sizing all read that one frame. The one
     sizing action materializes the stage, counts the delta's band rows
     and lists its distinct band keys up to ``_LOOKUP_CAP + 1``.
@@ -411,24 +412,21 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
     nothing) and the lazy bulk-shaped plan is returned."""
     from pyspark.sql import Observation
 
-    from ..planmode import is_plan_only
-    from .dedup import _materialize_release
-
     meta = _load_meta(path)
-    stage = _stage(df_new, id_col, text_col, n_hashes, n_bands, shingle_n)
-    sets_new = stage.select("id", "sh")
+    delta = _stage(df_new, id_col, text_col, n_hashes, n_bands, shingle_n)
+    sets_new = delta.select("id", "sh")
     if meta is None or is_plan_only():
         if meta is None:
             stored_bands = _banded(read_signatures(spark, path))
         else:
             stored_bands = _read_bands(spark, path, meta)
         return _verify_jaccard(
-            _cross_pairs(_banded(stage), stored_bands),
+            _cross_pairs(_banded(delta), stored_bands),
             sets_new.unionByName(read_shingle_sets(spark, path))
             .dropDuplicates(["id"]), threshold)
 
-    stage.persist()  # sets_new reads it too
-    banded_new = _band_rows(stage, meta)
+    stage(delta, "memory")  # in place: sets_new reads it too
+    banded_new = _band_rows(delta, meta)
     # Sizing is ONE driver action in every regime, and it materializes
     # the stage: the distinct band keys are limit-collected at
     # _LOOKUP_CAP + 1, and an Observation BELOW the groupBy counts every
@@ -467,36 +465,35 @@ def pairs_against_index(df_new: DataFrame, id_col: str, text_col: str,
         else:
             stored_b = stored_b.filter(
                 f"band_sig IN ({_in_list([sig for _, _, sig in keys])})")
-    cands = (_cross_pairs(banded_new, stored_b)
-             .selectExpr("*", *[_bucket(f"id_{s}", meta["ibkt"])
-                                + f" AS ibkt_{s}" for s in "ab"])
-             .persist())
+    cands = stage(_cross_pairs(banded_new, stored_b)
+                  .selectExpr("*", *[_bucket(f"id_{s}", meta["ibkt"])
+                                     + f" AS ibkt_{s}" for s in "ab"]),
+                  "memory")
     listed = cands.limit(_SEEK_CAP + 1).collect()
     ids = {r[k] for r in listed for k in ("id_a", "id_b")}
     stored_sets = _read_sets_with_ibkt(spark, path, meta)
-    id_type = stage.schema["id"].dataType.simpleString()
+    id_type = delta.schema["id"].dataType.simpleString()
     if (len(listed) <= _SEEK_CAP and len(ids) <= _SEEK_CAP
             and all(_literal(i) is not None for i in ids)):
         out = _verify_on_driver(
             spark, listed, sets_new, stored_sets, id_type, threshold)
-        stage.unpersist()
-        cands.unpersist()
-        return out
-    if bulk:
-        sets_ = (sets_new.unionByName(read_shingle_sets(spark, path))
-                 .dropDuplicates(["id"]))
-        return _materialize_release(
-            _verify_jaccard(cands.select("id_a", "id_b"), sets_, threshold),
-            stage, cands)
-    cand_ids = (cands.select(F.col("id_a").alias("id"))
-                .unionByName(cands.select(F.col("id_b").alias("id")))
-                .distinct())
-    sets_ = (sets_new.join(cand_ids, "id", "left_semi")
-             .unionByName(stored_sets.join(cand_ids, "id", "left_semi")
-                          .select("id", "sh"))
-             .dropDuplicates(["id"]))
-    out = _verify_jaccard(cands.select("id_a", "id_b"), sets_, threshold)
-    return _materialize_release(out, stage, cands)
+    else:
+        if bulk:
+            sets_ = (sets_new.unionByName(read_shingle_sets(spark, path))
+                     .dropDuplicates(["id"]))
+        else:
+            cand_ids = (cands.select(F.col("id_a").alias("id"))
+                        .unionByName(cands.select(F.col("id_b").alias("id")))
+                        .distinct())
+            sets_ = (sets_new.join(cand_ids, "id", "left_semi")
+                     .unionByName(stored_sets.join(cand_ids, "id",
+                                                   "left_semi")
+                                  .select("id", "sh"))
+                     .dropDuplicates(["id"]))
+        out = stage(_verify_jaccard(cands.select("id_a", "id_b"), sets_,
+                                    threshold), "checkpoint")
+    release(delta, cands)
+    return out
 
 
 def _cross_pairs(banded_new: DataFrame, stored: DataFrame) -> DataFrame:
@@ -540,6 +537,37 @@ def _in_list(values) -> str:
     return ", ".join(_literal(v) for v in values)
 
 
+def _values(spark: SparkSession, rows: list[tuple], names: str,
+            cols: str) -> DataFrame:
+    """Rows of Spark SQL literals as a local relation ``SELECT cols
+    FROM VALUES rows AS t(names)``: reading it runs no Spark job and
+    ships nothing through a Python RDD. No rows gives the empty relation
+    with the same columns, so ``cols`` must cast every column."""
+    if rows:
+        body, where = ", ".join(f"({', '.join(r)})" for r in rows), ""
+    else:
+        body = f"({', '.join('NULL' for _ in names.split(','))})"
+        where = " WHERE false"
+    return spark.sql(f"SELECT {cols} FROM VALUES {body} AS t({names}){where}")
+
+
+def id_table(spark: SparkSession, ids, data_type) -> DataFrame:
+    """``ids`` (a DataFrame or an iterable) as a one-column ``id``
+    table of ``data_type``; a local VALUES relation whenever every id
+    has a literal."""
+    if isinstance(ids, DataFrame):
+        return ids.toDF("id")
+    ids = list(ids)
+    lits = [_literal(i) for i in ids]
+    if None in lits:
+        from pyspark.sql.types import StructField, StructType
+
+        return spark.createDataFrame(
+            [(i,) for i in ids], StructType([StructField("id", data_type)]))
+    return _values(spark, [(v,) for v in lits], "id",
+                   f"CAST(id AS {data_type.simpleString()}) AS id")
+
+
 def _verify_on_driver(spark: SparkSession, listed: list, sets_new: DataFrame,
                       stored_sets: DataFrame, id_type: str,
                       threshold: float) -> DataFrame:
@@ -571,17 +599,12 @@ def _verify_on_driver(spark: SparkSession, listed: list, sets_new: DataFrame,
         den = len(a) + len(b) - inter
         if den and inter / den >= threshold:
             out.append((r["id_a"], r["id_b"], inter / den))
-    cols = (f"CAST(id_a AS {id_type}) AS id_a, "
-            f"CAST(id_b AS {id_type}) AS id_b, jaccard")
-    if not out:
-        return spark.sql(f"SELECT {cols} FROM VALUES "
-                         "(NULL, NULL, CAST(0 AS DOUBLE)) "
-                         "AS t(id_a, id_b, jaccard) WHERE false")
     # a double's repr parses back to the same double
-    rows = ", ".join(f"({_literal(a)}, {_literal(b)}, "
-                     f"CAST('{jac!r}' AS DOUBLE))" for a, b, jac in out)
-    return spark.sql(f"SELECT {cols} FROM VALUES {rows} "
-                     "AS t(id_a, id_b, jaccard)")
+    return _values(spark, [(_literal(a), _literal(b), f"'{jac!r}'")
+                           for a, b, jac in out], "id_a, id_b, jaccard",
+                   f"CAST(id_a AS {id_type}) AS id_a, "
+                   f"CAST(id_b AS {id_type}) AS id_b, "
+                   "CAST(jaccard AS DOUBLE) AS jaccard")
 
 
 def _jaccard(j: DataFrame, threshold: float) -> DataFrame:
@@ -618,16 +641,9 @@ def purge_from_index(spark: SparkSession, path: str, ids) -> int:
     assert meta is not None, "purge_from_index needs the v2 layout"
     adopt_orphans(path)
     sig = read_signatures(spark, path)
-    if isinstance(ids, DataFrame):
-        ids_df = ids.toDF("id")
-    else:
-        from pyspark.sql.types import StructField, StructType
-
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids],
-            StructType([StructField("id", sig.schema["id"].dataType)]))
-    ids_df = ids_df.persist()
-    purged_sig = sig.join(F.broadcast(ids_df), "id", "left_semi").persist()
+    ids_df = id_table(spark, ids, sig.schema["id"].dataType)
+    purged_sig = stage(sig.join(F.broadcast(ids_df), "id", "left_semi"),
+                       "memory")
     try:
         n_purged = purged_sig.count()
         if n_purged == 0:
@@ -677,8 +693,7 @@ def purge_from_index(spark: SparkSession, path: str, ids) -> int:
         _write_meta(path, **meta)
         return rewritten
     finally:
-        purged_sig.unpersist()
-        ids_df.unpersist()
+        release(purged_sig)
 
 
 def compact_index(spark: SparkSession, path: str) -> int:

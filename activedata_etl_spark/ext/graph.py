@@ -22,51 +22,9 @@ Scale design:
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, functions as F
 
-# Edge-list caches created by pagerank(), bounded to the most recent
-# _KEEP calls (or drained via release_caches()): a long-lived library
-# caller looping pagerank accumulates at most _KEEP cached edge lists
-# instead of one per call for the session's lifetime (r8 advisor).
-# _KEEP > 1 because the service is a ThreadingHTTPServer — releasing
-# at EVERY call would unpersist a concurrent request's edge list
-# mid-execution and re-pay the quadratic edge-generation recompute the
-# persist exists to prevent (r9 review finding #5); a dropped cache is
-# still only a recompute, never a correctness hazard, and laziness is
-# preserved (no eager checkpoint at plan-construction time).
-_EDGE_CACHES: list[DataFrame] = []
-_KEEP = 4
-# The service is a ThreadingHTTPServer: two request threads can race
-# release/trim on this module-global list (len-check-then-pop is not
-# atomic — an interleaving pops from an empty list and raises inside a
-# request thread). All mutations go through this lock; unpersist()
-# itself is JVM-side thread-safe (r9 advisor).
-_CACHE_LOCK = threading.Lock()
-
-
-def release_caches() -> None:
-    """Unpersist edge-list caches from earlier :func:`pagerank` calls."""
-    with _CACHE_LOCK:
-        drained = list(_EDGE_CACHES)
-        _EDGE_CACHES.clear()
-    for df in drained:
-        df.unpersist()
-
-
-def _trim_caches() -> None:
-    with _CACHE_LOCK:
-        excess = []
-        while len(_EDGE_CACHES) >= _KEEP:
-            excess.append(_EDGE_CACHES.pop(0))
-    for df in excess:
-        df.unpersist()
-
-
-def _track_cache(df: DataFrame) -> None:
-    with _CACHE_LOCK:
-        _EDGE_CACHES.append(df)
+from ..staging import stage
 
 
 def cooccurrence_edges(df: DataFrame, id_col: str, slot_cols: list[str],
@@ -163,22 +121,17 @@ def pagerank(edges: DataFrame, n_iter: int = 3,
     that array dominates: the sf1 rig's 100×-edge co-occurrence graph
     (avg in-degree ~2000) runs the fold form ~3× slower than the plain
     sum. Keep True for oracle parity; pass False in production."""
-    # PERSIST the directed edge list: every iteration joins against it,
-    # and nodes/outdeg each scan it once more — without the persist the
-    # whole upstream edge-generation lineage (for co-occurrence graphs a
-    # quadratic slot self-join) re-executes per consumer. Measured on
-    # the sf1 rig's 14M-edge graph: 28.1s → ~1s for 3 iterations. Lazy
-    # persist, so plan-only probes stay plan-only. RELEASE: each call
-    # trims the tracker to the last _KEEP edge caches (concurrent
-    # requests keep theirs), the HTTP service additionally unpersists
-    # request-created caches after each response, and release_caches()
-    # is the explicit library hook.
-    _trim_caches()
-    directed = (edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-                .unionAll(edges.select(F.col("b").alias("src"),
-                                       F.col("a").alias("dst")))
-                .persist())
-    _track_cache(directed)
+    # STAGE the directed edge list in memory: every iteration joins
+    # against it, and nodes/outdeg each scan it once more — unstaged,
+    # the whole upstream edge-generation lineage (for co-occurrence
+    # graphs a quadratic slot self-join) re-executes per consumer
+    # (sf1 rig, 14M edges: 28.1s → ~1s for 3 iterations). The returned
+    # ranks read it lazily, so it lives until the caller's scope closes.
+    directed = stage(edges.select(F.col("a").alias("src"),
+                                  F.col("b").alias("dst"))
+                     .unionAll(edges.select(F.col("b").alias("src"),
+                                            F.col("a").alias("dst"))),
+                     "memory")
     nodes = directed.select(F.col("src").alias("node")).distinct()
     nn = nodes.groupBy().agg(F.count(F.lit(1)).alias("__N__"))
     outdeg = directed.groupBy("src").agg(F.count(F.lit(1)).alias("__d__"))

@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..staging import release, stage
+
 FEATURE_DIM = 8
 
 FEATURES_SCHEMA = "id bigint, mime string, n_bytes bigint, features array<double>"
@@ -541,9 +543,9 @@ def ahash_group_index_pairs(df_new: DataFrame, id_col: str, text_col: str,
     names = [f"band{b}" for b in range(AHASH_BANDS)]
 
     dh = ahash_bands(df_new, id_col, text_col)
-    dgroups = (dh.groupBy(*names)
-               .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-               .persist())
+    dgroups = stage(dh.groupBy(*names)
+                    .agg(F.array_sort(F.collect_list("id")).alias("ids")),
+                    "memory")
 
     # leg 1: within the batch
     within = ahash_pairs(df_new, id_col, text_col, max_hamming)
@@ -611,7 +613,6 @@ def ahash_group_index_pairs(df_new: DataFrame, id_col: str, text_col: str,
              .select(F.least("x", "y").alias("id_a"),
                      F.greatest("x", "y").alias("id_b"), "hamming"))
 
-    from .dedup import _materialize_release
-
-    return _materialize_release(
-        within.unionByName(same).unionByName(cross), dgroups)
+    out = stage(within.unionByName(same).unionByName(cross), "checkpoint")
+    release(dgroups)
+    return out

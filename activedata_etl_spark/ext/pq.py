@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..io import note_schema, open_stored
+from ..staging import release, stage
 from .similarity import _dvec
 
 
@@ -541,19 +542,14 @@ def purge_pq_codes(spark, path: str, ids) -> int:
     actually holding forgotten ids rewrite (untouched clusters stay
     byte-identical — the minhash purge precedent). Returns the number
     of directories rewritten (0/1 for the flat PQ layout)."""
-    from pyspark.sql import DataFrame as _DF
-    from pyspark.sql.types import StructField, StructType
-
+    from .dedup_index import id_table
     from .iosafe import adopt_orphans, atomic_rewrite
 
     adopt_orphans(path)
     meta = _load_meta(path)
     codes_dir = _os.path.join(path, "codes")
     codes = _open(spark, path, "codes", meta)
-    ids_df = ids.toDF("id") if isinstance(ids, _DF) else \
-        spark.createDataFrame(
-            [(i,) for i in ids],
-            StructType([StructField("id", codes.schema["id"].dataType)]))
+    ids_df = id_table(spark, ids, codes.schema["id"].dataType)
     if "nlist" not in meta:
         if codes.join(F.broadcast(ids_df), "id", "left_semi").isEmpty():
             return 0
@@ -728,7 +724,7 @@ def ivfpq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
     meta = _load_meta(path)
     cent = _open(spark, path, "centroids", meta)
     cb = _open(spark, path, "codebook", meta)
-    probes = _route(queries, cent, id_col, vec_col, nprobe).persist()
+    probes = stage(_route(queries, cent, id_col, vec_col, nprobe), "memory")
     cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
     codes = (_open(spark, path, "codes", meta)
              .filter(F.col("cid").isin(cids) if cids else F.lit(False))
@@ -740,6 +736,6 @@ def ivfpq_index_topk(queries: DataFrame, id_col: str, vec_col: str,
     out = _adc_topk(codes.drop("cid"), cb, queries, id_col, vec_col,
                     k, meta["m"], meta["dim"], cand=cand,
                     perm=meta.get("perm"), rot=meta.get("rot"))
-    from .dedup import _materialize_release
-
-    return _materialize_release(out, probes)
+    out = stage(out, "checkpoint")
+    release(probes)
+    return out

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..staging import is_plan_only, release, stage
 from .dedup import FANOUT_BUCKET_LIMIT, bounded_bucket_pairs
 
 
@@ -195,14 +196,14 @@ def cosine_dedup_pairs(df: DataFrame, id_col: str, vec_col: str,
     groups = (df.groupBy(F.xxhash64(F.col(vec_col)).alias("__h__"), *cl)
               .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("__ids__"),
                    F.first(F.col(vec_col)).alias("__v0__")))
-    canon = groups.select(
+    canon = stage(groups.select(
         *cl,
         F.element_at("__ids__", 1).alias("__cid__"),
         "__ids__",
         F.transform(F.col("__v0__"), lambda x: x.cast("double")).alias("__v__"),
         norm(F.col("__v0__")).alias("__n__"),
         F.array(*sign_band_ints(F.col("__v0__"), n_bits, n_bands)).alias("__bands__"),
-    ).persist()
+    ), "memory")
 
     # r13 opt (guide §2.4/§2.3, remove shuffles): three rewrites vs the
     # r2 shape, all blocking-equivalent —
@@ -403,26 +404,30 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str,
     # tables (VERDICT r9 #5) — only behind rows-only corpus knobs
     pruned = two_level and nlist >= _TWO_LEVEL_MIN
 
-    def _assign(cur: DataFrame) -> DataFrame:
+    pin = None
+    for i in range(n_iter + 1):
         if pruned:
             # PIN the centroid frontier before the pruned assignment:
-            # the two-level path references ``cur`` several times per
+            # the two-level path references it several times per
             # iteration (super seeds, super assignment, child map, the
             # final broadcast) and Catalyst plans each reference's tree
             # independently — unpinned, every reference re-runs the
             # whole upstream Lloyd chain and the recompute compounds
             # per iteration (measured 18.2s vs 3.9s fixed at the 10×
-            # rig before this pin — the pagerank/bpe frontier lesson,
-            # SCALE.md §r8). The flat path references ``cur`` once, so
-            # it stays lazy (and plan-only probes never reach here:
-            # pruned is False under explain).
-            cur = cur.localCheckpoint(eager=True)
-            return _argmax_centroid_pruned(v, id_col, "__v__", cur, nlist)
-        return _argmax_centroid(v, id_col, "__v__", cur)
-
-    assign = None
-    for _ in range(n_iter):
-        assign = _assign(centroids)
+            # rig). Only the next round reads a pin, so each round
+            # releases its predecessor's. The flat path references the
+            # centroids once, so it stays lazy (and plan-only probes
+            # never pin: pruned is False under explain).
+            centroids = stage(centroids, "checkpoint")
+            if pin is not None:
+                release(pin)
+            pin = centroids
+            assign = _argmax_centroid_pruned(v, id_col, "__v__", centroids,
+                                             nlist)
+        else:
+            assign = _argmax_centroid(v, id_col, "__v__", centroids)
+        if i == n_iter:
+            return centroids, assign
         # Per-dimension mean via FLOOR-quantized integer sums, not a
         # decimal cast: double→decimal rounding has a tie rule (Spark
         # HALF_UP vs DuckDB) and a real tie surfaced at sf0.1 — one
@@ -441,8 +446,6 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str,
             .agg(F.array_sort(F.collect_list(F.struct("__i__", "__m__"))).alias("__s__"))
             .select("cid", F.col("__s__.__m__").alias("cvec"))
         )
-    assign = _assign(centroids)
-    return centroids, assign
 
 
 def ivf_topk(queries: DataFrame, centroids: DataFrame, assign: DataFrame,
@@ -519,8 +522,6 @@ def auto_sign_bits(candidates: DataFrame, vec_col: str,
 
 def _resolve_bits(n_bits, candidates: DataFrame, vec_col: str) -> int:
     if n_bits == "auto":
-        from ..planmode import is_plan_only
-
         if is_plan_only():
             # explain contract: "analyze + optimize, execute NOTHING" —
             # auto-width costs a count() + first() over the candidate
@@ -633,8 +634,6 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     two_level = False
     if nlist == "auto":
         import math
-
-        from ..planmode import is_plan_only
 
         # same explain-contract guard as _resolve_bits: the √N probe is
         # a full count() — plan-only gets a fixed representative nlist.
@@ -771,9 +770,9 @@ def pairs_from_band_index(spark, path: str, threshold: float = 0.95,
                    F.first("q").alias("q"),
                    F.array_distinct(F.flatten(
                        F.collect_list("__bs__"))).alias("__bands__")))
-    canon = groups.select(
+    canon = stage(groups.select(
         F.element_at("__ids__", 1).alias("__cid__"), "__ids__", "q",
-        F.array_sort("__bands__").alias("__bands__")).persist()
+        F.array_sort("__bands__").alias("__bands__")), "memory")
 
     # r13 opt (guide §2.4, same rewrites as cosine_dedup_pairs): the
     # `.distinct()` over candidates was a full extra exchange; the
@@ -870,7 +869,7 @@ def knn_graph(df: DataFrame, id_col: str, vec_col: str,
     materialization; write-out partitioned by cid in a real pipeline).
     """
     _, assign = ivf_build(df, id_col, vec_col, nlist, n_iter)
-    assign = assign.persist()
+    assign = stage(assign, "memory")
     a = assign.select("cid", F.col(id_col).alias("src"),
                       F.col("__v__").alias("__sv__"))
     b = assign.select("cid", F.col(id_col).alias("dst"),

@@ -7,9 +7,9 @@ is a single scan with no shuffle until the final aggregate.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, functions as F
+
+from ..staging import stage
 
 #: Tiny per-language stopword lists for the n-gram/stopword-overlap
 #: language-ID heuristic. Real pipelines plug a model here; the heuristic
@@ -251,28 +251,6 @@ def length_batches(df, shard_col: str, id_col: str, n_tok_col: str,
                          - F.col("sum_tok")).cast("bigint")))
 
 
-_BPE_CACHES: list[list] = []  # one group (vocab + winners) per call
-_BPE_KEEP = 3
-# Mutated from ThreadingHTTPServer request threads — same lock
-# discipline as ext.graph._EDGE_CACHES (r9 advisor): list mutation
-# under the lock, unpersist() (JVM-side, thread-safe) outside it.
-_BPE_LOCK = threading.Lock()
-
-
-def _trim_bpe_caches() -> None:
-    # keep the last few call-groups: the service is threaded, so
-    # releasing everything at each call would unpersist a concurrent
-    # request's winner chain mid-plan and re-pay the 2^n recompute the
-    # persists exist for (r9 review finding #5)
-    with _BPE_LOCK:
-        excess = []
-        while len(_BPE_CACHES) >= _BPE_KEEP:
-            excess.append(_BPE_CACHES.pop(0))
-    for group in excess:
-        for df in group:
-            df.unpersist()
-
-
 def bpe_merges(df, text_col: str, n_merges: int = 3, sep: str = "~"):
     """Byte-pair-encoding merge induction (Sennrich et al. 2016) — learn
     the first ``n_merges`` merges from the corpus, the vocabulary-
@@ -293,26 +271,15 @@ def bpe_merges(df, text_col: str, n_merges: int = 3, sep: str = "~"):
     """
     from pyspark.sql import functions as F
 
-    # PERSIST the weighted vocabulary and each round's 1-row winner:
-    # round r's `top` subtree is consumed twice (the output row and the
-    # state rewrite), and it transitively contains every earlier round —
-    # without the persists the corpus scan re-executes ~2^n_merges times
-    # inside one plan (invisible at sf0.1, 26× wall at the sf1 rig).
-    # Both persists are LAZY (plan-only probes stay plan-only). RELEASE:
-    # each call trims the tracker to the last _BPE_KEEP call-groups
-    # (same bound as ext.graph.pagerank — a looping library caller
-    # holds a few calls' caches, not the session's accumulation, and
-    # concurrent requests keep theirs); the HTTP service additionally
-    # unpersists request caches per response.
-    _trim_bpe_caches()
-    group = []
-    with _BPE_LOCK:
-        _BPE_CACHES.append(group)
-    words = (df.select(F.explode(tokens(text_col)).alias("w"))
-             .filter(~F.col("w").contains(sep) & (F.length("w") > 0))
-             .groupBy("w").agg(F.count(F.lit(1)).alias("wf"))
-             .persist())
-    group.append(words)
+    # STAGE the weighted vocabulary and each round's 1-row winner in
+    # memory: round r's `top` subtree is consumed twice (the output row
+    # and the state rewrite), and it transitively contains every earlier
+    # round — unstaged, the corpus scan re-executes ~2^n_merges times
+    # inside one plan (26× wall at the sf1 rig). The returned frame
+    # reads them lazily, so they live until the caller's scope closes.
+    words = stage(df.select(F.explode(tokens(text_col)).alias("w"))
+                  .filter(~F.col("w").contains(sep) & (F.length("w") > 0))
+                  .groupBy("w").agg(F.count(F.lit(1)).alias("wf")), "memory")
     state = words.select(
         F.concat_ws(sep, F.split(F.col("w"), "")).alias("seq"), "wf")
     out = None
@@ -328,9 +295,8 @@ def bpe_merges(df, text_col: str, n_merges: int = 3, sep: str = "~"):
         counted = (state.select(F.explode(pairs).alias("p"), "wf")
                    .groupBy("p.lhs", "p.rhs")
                    .agg(F.sum("wf").cast("bigint").alias("n")))
-        top = (counted.orderBy(F.col("n").desc(), "lhs", "rhs").limit(1)
-               .select("lhs", "rhs", "n").persist())
-        group.append(top)
+        top = stage(counted.orderBy(F.col("n").desc(), "lhs", "rhs")
+                    .limit(1).select("lhs", "rhs", "n"), "memory")
         row = top.select(F.lit(rank).alias("merge_rank"), "lhs", "rhs",
                          F.concat("lhs", "rhs").alias("merged"), "n")
         out = row if out is None else out.unionByName(row)
@@ -500,9 +466,9 @@ def sparse_cosine_pairs(df, id_col: str, text_col: str = "text",
               .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("__ids__"),
                    F.first(F.col(text_col)).alias("__t__"),
                    F.count(F.lit(1)).alias("__nc__")))
-    canon = groups.select(
+    canon = stage(groups.select(
         F.element_at("__ids__", 1).alias("id"), "__ids__", "__t__", "__nc__"
-    ).persist()
+    ), "memory")
     tf = (canon.select("id", "__nc__", F.explode(tokens("__t__")).alias("term"))
           .filter(F.length("term") > 0)
           .groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"),

@@ -71,13 +71,12 @@ def run(spark: SparkSession, q: dict[str, Any],
     raises at analysis instead of running an arbitrarily large drain.
 
     ``plan_only=True`` extends that contract to the extension operators
-    whose builders eagerly materialize (the prefix-filter family's
-    localCheckpoint, ext/dedup._materialize_release): under plan-only
-    the op returns its LAZY plan, so an explain on op:prefix_filter_pairs
+    whose builders eagerly materialize (checkpoint and disk stages,
+    see ``staging``): under plan-only the op returns its LAZY plan, so an explain on op:prefix_filter_pairs
     reports the real join plan instead of executing it. Implies
     ``allow_stream_drain=False``."""
     if plan_only:
-        from ..planmode import plan_only as _plan_only
+        from ..staging import plan_only as _plan_only
 
         with _plan_only():
             return run(spark, q, allow_stream_drain=False, plan_only=False)
@@ -500,7 +499,7 @@ def _aggregate(spark: SparkSession, df: DataFrame, selects: list[dict],
                 if cap < 1:
                     raise ValueError(
                         f"edge {name!r}: domain.limit must be >= 1")
-                from ..planmode import is_plan_only
+                from ..staging import is_plan_only
 
                 if is_plan_only():
                     # explain contract: the frequency probe is a real

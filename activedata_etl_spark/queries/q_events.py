@@ -14,7 +14,8 @@ from ..functions.exact import dsum, sql_dsum
 from ..io import load_table
 from ..operators import joins as J
 from ..streaming import batch_windows as BW
-from .registry import query, scratch_dir
+from ..staging import stage
+from .registry import query
 
 
 @query(
@@ -199,43 +200,23 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; dead at 100 TB)."""
     from pyspark.sql import Window
 
-    import os
-
     e = load_table(spark, sf_dir, "events")
-    # r13 opt (guide §2.4, fewer passes): the session table used to be
-    # derived with TWO full event-level Window passes (lag flag + running
-    # sum over every event) before the aggregate — and the whole chain
-    # runs twice, once per self-join side. F.session_window builds the
-    # identical sessions in ONE merge pass over the sorted events (the
-    # same operator events_sessionize_30m cross-checks against this
-    # oracle's lag+cumsum formulation; exact-boundary semantics pinned
-    # by tests/test_session_boundary.py), and session_no — the 1-based
-    # time-rank of the session — is recovered by a row_number over the
-    # SESSION rows (~16× fewer rows than events here; sessions are
-    # disjoint per user so ordering by start is total). Types match the
-    # old cumsum exactly (bigint).
-    #
-    # r14 (VERDICT r13 #3; guide §3.3/§6): the derivation chain still
-    # ran TWICE — once per self-join side (exchange reuse does not fire
-    # across the aliased self-join; in-plan repartition measured a
-    # 1.5-1.9× regression in r13; an in-query persist would contaminate
-    # the bench's repeated materializations). The cluster-faithful fix
-    # is materializing the session table to scratch parquet ONCE per
-    # invocation (the snowflake_roundtrip write pattern — derived fresh
-    # from the events input every time the query is built, never
-    # existence-cached) and feeding BOTH join sides from the one file:
-    # plan shows one session derivation + two cheap scans. At 100 TB
-    # this is the bucketed session table a real pipeline writes anyway.
+    # F.session_window builds the sessions in ONE merge pass over the
+    # sorted events (events_sessionize_30m cross-checks it against the
+    # oracle's lag+cumsum form; boundary semantics pinned by
+    # tests/test_session_boundary.py); session_no, the 1-based time rank
+    # of a session, is a row_number over the SESSION rows (sessions are
+    # disjoint per user, so ordering by start is total). Exchange reuse
+    # does not fire across the aliased self-join, so the session table
+    # is a disk stage (a path of this build's own; concurrent builds
+    # never share it) and both join sides scan that one file.
     sw = (e.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
           .agg(F.min("ts").alias("s"), F.max("ts").alias("e")))
-    sess = sw.select(
+    sess = stage(sw.select(
         "user_id",
         F.row_number().over(Window.partitionBy("user_id").orderBy("s"))
         .cast("bigint").alias("session_no"),
-        "s", "e")
-    path = os.path.join(scratch_dir(sf_dir, "sess30"), "sessions")
-    sess.write.mode("overwrite").parquet(path)
-    sess = spark.read.parquet(path)
+        "s", "e"), "disk")
     out = J.interval_overlap_join(
         sess, sess, "s", "e", "s", "e", bin_width_s=3600,
         extra_cond=F.col("l.user_id") < F.col("r.user_id"))

@@ -18,7 +18,8 @@ from ..ext import multimodal as MM
 from ..ext import similarity as SIM
 from ..ext import text as TX
 from ..io import load_table
-from .registry import query, scratch_dir
+from ..staging import scratch_path, stage
+from .registry import query
 
 # DuckDB-side shared fragments (mirror ext/text.py definitions)
 _TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -807,7 +808,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     job to validate n_hashes/threshold; both engines compute both numbers
     from the same md5 construction."""
     d = load_table(spark, sf_dir, "documents")
-    sh = DD.shingle_table(d, "doc_id", "text").persist()
+    sh = stage(DD.shingle_table(d, "doc_id", "text"), "memory")
     sig = DD.minhash_table(d, "doc_id", "text", sh=sh)
     cands = DD.lsh_candidate_pairs(d, "doc_id", "text", sig=sig)
     exact = DD.jaccard_pairs(d, cands, "doc_id", "text",
@@ -1033,12 +1034,9 @@ def dedup_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     check proves index-path ≡ direct-path ≡ independent SQL. At 100 TB
     this is the nightly-ingest shape: the index is ~1% of corpus size
     and the only thing the candidate join ever shuffles."""
-    import os
-    import tempfile
-
     from ..ext import dedup_index as DI
 
     d = load_table(spark, sf_dir, "documents")
-    path = scratch_dir(sf_dir, "dedup_index")
+    path = scratch_path("dedup_index")
     DI.build_index(d, "doc_id", "text", path)
     return DI.near_dup_pairs_from_index(spark, path, threshold=0.2)

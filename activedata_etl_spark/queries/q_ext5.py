@@ -13,7 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..ext import text as TX
 from ..io import load_table
-from .registry import query, scratch_dir
+from ..staging import scratch_path
+from .registry import query
 
 _TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 
@@ -193,15 +194,12 @@ def sim_band_index_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture vectors never reach τ=0.95); the oracle states
     blocking-by-float-signs + integer-dot cosine with no index and no
     prepass, proving the persisted path is semantics-preserving."""
-    import os
-    import tempfile
-
     from ..ext import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = emb.unionByName(
         emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding"))
-    path = scratch_dir(sf_dir, "band_index")
+    path = scratch_path("band_index")
     SIM.build_band_index(corpus, "vec_id", "embedding", path)
     return SIM.pairs_from_band_index(spark, path, threshold=0.95)
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.exact import dsum, sql_dsum
 from ..io import load_parquet, load_table
+from ..staging import scratch_path
 from .q_ext5 import _CMS_CELLS
 from .registry import ensure_built, query, scratch_dir
 
@@ -40,21 +41,19 @@ def etl_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-scan SQL over the base table. The strict file-subset effect is
     measured in test_etl (test_load_path_manifest_pruning)."""
     import os
-    import tempfile
 
     from ..sources import layout as L
 
     o = load_table(spark, sf_dir, "orders")
-    data = os.path.join(scratch_dir(sf_dir, "manifest"),
-                        "orders.parquet")
-    if not os.path.isdir(L.manifest_path(data)):
+    data = os.path.join(scratch_dir(sf_dir, "manifest"), "orders.parquet")
+
+    def _build():
         # dims normalized to the SAME 10-bit range (layout.py docstring
         # rule — a wide dim interleaved with a narrow one parks the
         # narrow dim in dead high bits and nothing clusters on it):
         # custkey scaled by its max, orderkey folded mod 1024. The
         # manifest stores the RAW column stats, so pruning is on real
-        # values; manifest written LAST = completion marker for the
-        # cache.
+        # values.
         hi_ck = o.agg(F.max("o_custkey")).first()[0]
         L.write_zordered(
             o, data,
@@ -62,6 +61,8 @@ def etl_manifest_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.pmod(F.col("o_orderkey"), F.lit(1024))],
             n_files=8, bits=10)
         L.write_manifest(spark, data, ["o_custkey"])
+
+    ensure_built(os.path.dirname(data), _build)
     pruned = load_parquet(spark, data, bounds={"o_custkey": (100, 500)})
     return (pruned.groupBy("o_orderpriority")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -154,13 +155,10 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (est >= exact, the agg_sketch_audit pattern). At 100 TB the ranking
     join touches only the d·w-per-group register table; the corpus is
     scanned exactly once, at index-build time."""
-    import os
-    import tempfile
-
     from ..functions import cms
 
     e = load_table(spark, sf_dir, "events")
-    path = scratch_dir(sf_dir, "cms_hh")
+    path = scratch_path("cms_hh")
     # two deterministic half-corpus batches — idempotent batch-keyed
     # overwrites (replay-safe, see append_cms_index)
     for b in (0, 1):
@@ -456,9 +454,6 @@ def dedup_index_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the incremental path produces exactly the pairs a from-scratch run
     would attribute to the new batch. At 100 TB this is the shape that
     makes daily dedup O(|delta|), not O(|corpus|)."""
-    import os
-    import tempfile
-
     from ..ext import dedup_index as DI
 
     d = load_table(spark, sf_dir, "documents")
@@ -484,9 +479,6 @@ def dedup_chunk_delta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk-dedup SQL restricted to delta ids: green proves the
     incremental path reproduces exactly what a from-scratch corpus run
     reports for the new docs."""
-    import os
-    import tempfile
-
     from ..ext import dedup as DD
 
     d = load_table(spark, sf_dir, "documents")
@@ -561,7 +553,6 @@ def agg_hll_delta_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch full sketch, bucket for bucket. At 100 TB the nightly
     cost is one delta scan + two m-row register reads."""
     import os
-    import tempfile
 
     from ..functions import hll
 
@@ -641,12 +632,11 @@ def agg_cms_delta_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     its batch — the property that makes retraction (delete a shard)
     and sliding-window sketches (sum the last K shards) correct."""
     import os
-    import tempfile
 
     from ..functions import cms
 
     e = load_table(spark, sf_dir, "events")
-    path = scratch_dir(sf_dir, "cms_delta")
+    path = scratch_path("cms_delta")
     for b in (0, 1):
         cms.append_cms_index(
             e.filter(F.pmod("event_id", F.lit(2)) == b),

@@ -205,15 +205,14 @@ def etl_manifest_pruned_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in test_etl's 2-D pruning test); the oracle is the plain
     full-scan filter — pruning must be result-invisible."""
     import os
-    import tempfile
 
     from ..io import load_parquet
     from ..sources import layout as L
 
     o = load_table(spark, sf_dir, "orders")
-    data = os.path.join(scratch_dir(sf_dir, "manifest2d"),
-                        "orders.parquet")
-    if not os.path.isdir(L.manifest_path(data)):
+    data = os.path.join(scratch_dir(sf_dir, "manifest2d"), "orders.parquet")
+
+    def _build():
         hi = o.agg(F.max("o_custkey").alias("ck"),
                    F.max("o_orderkey").alias("ok")).first()
         L.write_zordered(
@@ -222,6 +221,8 @@ def etl_manifest_pruned_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.floor(F.col("o_orderkey") * 1024 / (hi["ok"] + 1)).cast("bigint")],
             n_files=8, bits=10)
         L.write_manifest(spark, data, ["o_custkey", "o_orderkey"])
+
+    ensure_built(os.path.dirname(data), _build)
     pruned = load_parquet(spark, data,
                           bounds={"o_custkey": (200, 700),
                                   "o_orderkey": (1000, 30000)})
@@ -390,9 +391,6 @@ def text_bm25_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached index under the system temp dir is rebuilt from the base
     table if absent; postings written LAST per shard = completion
     marker."""
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     path = scratch_dir(sf_dir, "bm25")
 
@@ -425,9 +423,6 @@ def text_bm25_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly). Plan: partition pruning bounds the scored scan to
     |delta|; at 100 TB the nightly cost is O(|delta| + postings stats),
     never a corpus re-tokenize."""
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     path = scratch_dir(sf_dir, "bm25_delta")
     ensure_built(path, lambda: [
@@ -988,9 +983,6 @@ def dedup_winnowing_index_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     index (two batch shards) — index invisibility: same oracle as
     dedup_winnowing_pairs verbatim. The stored index skips
     re-tokenizing; only fingerprint rows join."""
-    import os
-    import tempfile
-
     from ..ext import dedup as DD
 
     d = load_table(spark, sf_dir, "documents")

@@ -596,9 +596,6 @@ def multimodal_ahash_index_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole perceptual pipeline relationally and restricts to
     delta-touching pairs — a green check proves index-served results
     equal the full recompute."""
-    import os
-    import tempfile
-
     from ..ext import multimodal as MM
 
     d = load_table(spark, sf_dir, "documents")

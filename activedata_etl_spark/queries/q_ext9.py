@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..ext import dedup as DD
 from ..functions import aggs as AGG
 from ..io import load_table
+from ..staging import release, stage
 from .registry import ensure_built, query, scratch_dir
 from .q_ext import _SHINGLES
 
@@ -151,7 +152,7 @@ def dedup_prefix_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .alias("n_candidates_aggregate"))
     n_pairs = ver.agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     worst = pref.agg(F.max("__df__").cast("bigint").alias("max_prefix_df"))
-    return DD._materialize_release(
+    out = stage(
         n_cand.crossJoin(F.broadcast(n_agg))
         .crossJoin(F.broadcast(n_pairs))
         .crossJoin(F.broadcast(worst))
@@ -160,8 +161,9 @@ def dedup_prefix_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / F.col("n_candidates")).alias("precision"),
                 (F.lit(1.0) - F.col("n_candidates_aggregate") * F.lit(1.0)
                  / F.col("n_candidates")).alias("aggregate_reduction"),
-                "max_prefix_df"),
-        tok, pref)
+                "max_prefix_df"), "checkpoint")
+    release(tok, pref)
+    return out
 
 
 @query(
@@ -411,9 +413,6 @@ def dedup_prefix_index_delta_pairs(spark: SparkSession,
     index-served delta path returns exactly the from-scratch answer
     (recall 1.0 survives the split: the shared global order is
     recomputed over stored-elements ∪ delta-elements each run)."""
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     path = scratch_dir(sf_dir, "elemidx")
     ensure_built(path, lambda: DD.append_element_index(

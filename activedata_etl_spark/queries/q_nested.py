@@ -14,7 +14,8 @@ from ..functions.exact import sql_dsum
 from ..io import load_table
 from ..operators import nested as N
 from ..plans import query as JXQ
-from .registry import query, scratch_dir
+from ..staging import scratch_path
+from .registry import query
 
 
 def _nested_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,9 +315,6 @@ def snowflake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the storage — a green check proves the snowflake round-trip is
     lossless INCLUDING element order (first_ln = the [0] element only if
     __pos__ reassembly preserved the write-time l_linenumber order)."""
-    import os
-    import tempfile
-
     from ..operators import nested as N
     from ..sources import snowflake as SN
 
@@ -324,7 +322,7 @@ def snowflake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc = N.nest(li, parent_keys=["l_orderkey"],
                  item_cols=["l_linenumber", "l_quantity"],
                  order_by="l_linenumber")
-    path = scratch_dir(sf_dir, "snowflake")
+    path = scratch_path("snowflake")
     SN.write_snowflake(doc, path, ["l_orderkey"], "items")
     back = SN.read_snowflake(spark, path, "items")
     dec = "decimal(18,6)"

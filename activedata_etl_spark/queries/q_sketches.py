@@ -11,7 +11,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import bottomk as BK
 from ..io import load_table
-from .registry import query, scratch_dir
+from ..staging import scratch_path
+from .registry import query
 
 #: signature CTE over the distinct (event_type, user_id) sets — the
 #: shared substrate; rank over md5(user_id) per event type.
@@ -337,15 +338,12 @@ def agg_qhist_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     are value-checked per row. At 100 TB the bounds come from ≤64
     register rows per group; the exact order statistic here is the
     AUDIT (oracle-side discipline), not the serving path."""
-    import os
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..functions import qhist as QH
 
     d = load_table(spark, sf_dir, "documents")
-    path = scratch_dir(sf_dir, "qhist")
+    path = scratch_path("qhist")
     for b in (0, 1):
         QH.append_qhist_index(
             d.filter(F.pmod("doc_id", F.lit(2)) == b),
@@ -419,12 +417,11 @@ def agg_qhist_delta_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution of any language? Exact integer numerator, one final
     division (the text_term_drift_tv pattern for numeric columns)."""
     import os
-    import tempfile
 
     from ..functions import qhist as QH
 
     d = load_table(spark, sf_dir, "documents")
-    path = scratch_dir(sf_dir, "qhist")
+    path = scratch_path("qhist")
     for b in (0, 1):
         QH.append_qhist_index(
             d.filter(F.pmod("doc_id", F.lit(2)) == b),

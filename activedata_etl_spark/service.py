@@ -16,7 +16,9 @@ One shared SparkSession serves all requests (Spark is thread-safe for
 concurrent job submission; the scheduler interleaves jobs). Each request
 runs ``plans.query.run_formatted`` — results collect on the driver, so
 this is the reference's interactive-query role, not the bulk path: bulk
-consumers use the DataFrame API and keep results distributed.
+consumers use the DataFrame API and keep results distributed. Each POST
+runs inside its own ``staging.scope()``, so whatever the request staged
+is released once its response is written.
 """
 
 from __future__ import annotations
@@ -26,6 +28,8 @@ import datetime as dt
 import json
 import re
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from .staging import scope
 
 
 def _default(o):
@@ -315,85 +319,20 @@ def make_handler(spark, index_root: str | None = None):
                              "query_endpoint": "POST /query",
                              "columns_endpoint": "GET /columns/<table>"})
 
-        import threading as _threading
-
-        _cache_lock = _threading.Lock()
-        _inflight = 0
-        _quiescent_before: set | None = None
-
-        @staticmethod
-        def _persistent_ids() -> set:
-            """Ids of currently-cached RDDs (persist / localCheckpoint
-            both register here)."""
-            try:
-                m = spark.sparkContext._jsc.getPersistentRDDs()
-                return {int(k) for k in m.keySet().toArray()}
-            except Exception:
-                return set()
-
-        @staticmethod
-        def _release_new_caches(before: set) -> None:
-            """Unpersist every cache created since ``before`` — the
-            request-scoped hygiene that keeps a long-lived service from
-            accumulating CacheManager entries across /query requests
-            (operators like the LSH/prefix/cosine dedup families persist
-            intermediates per call). Called only at QUIESCENCE (the last
-            in-flight request's finally) and only while HOLDING
-            ``_cache_lock``: unpersisting a sibling's plain cache would
-            merely recompute, but a sibling's locally-CHECKPOINTED
-            result (lineage truncated) cannot be recomputed — releasing
-            it mid-flight would fail a valid query. Holding the lock for
-            the enumerate+unpersist closes the arrival race too: a
-            request that starts during the release blocks in
-            ``_enter_request`` (its increment takes the same lock before
-            any cache can be created), so its new RDD ids can never be
-            swept by a stale ``before`` snapshot."""
-            try:
-                m = spark.sparkContext._jsc.getPersistentRDDs()
-                for k in m.keySet().toArray():
-                    if int(k) not in before:
-                        m.get(k).unpersist(False)
-            except Exception:
-                pass
-
-        @classmethod
-        def _enter_request(cls) -> None:
-            """Count EVERY cache-capable handler (/query AND /sql) in
-            the quiescence accounting — the FIRST request of a busy
-            period snapshots the cache ids."""
-            with cls._cache_lock:
-                cls._inflight += 1
-                if cls._inflight == 1:
-                    cls._quiescent_before = cls._persistent_ids()
-
-        @classmethod
-        def _exit_request(cls) -> None:
-            """The LAST request to finish releases everything created
-            since the busy period began — under the lock, so no
-            concurrent arrival can interleave (see _release_new_caches)."""
-            with cls._cache_lock:
-                cls._inflight -= 1
-                if cls._inflight == 0 and cls._quiescent_before is not None:
-                    before = cls._quiescent_before
-                    cls._quiescent_before = None
-                    cls._release_new_caches(before)
-
         def do_POST(self):  # noqa: N802
             if self.path.rstrip("/") not in ("", "/query", "/sql",
                                              "/index"):
                 self._send(404, {"error": f"no such endpoint: {self.path}"})
                 return
-            Handler._enter_request()
-            try:
+            # everything a request stages is released once its response
+            # is written; a concurrent request keeps its own stages
+            with scope():
                 if self.path.rstrip("/") == "/sql":
                     self._handle_sql()
-                    return
-                if self.path.rstrip("/") == "/index":
+                elif self.path.rstrip("/") == "/index":
                     self._handle_index()
-                    return
-                self._handle_query()
-            finally:
-                Handler._exit_request()
+                else:
+                    self._handle_query()
 
         def _handle_index(self) -> None:
             try:

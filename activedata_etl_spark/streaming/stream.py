@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from ..staging import stage
+
 
 def file_stream(spark: SparkSession, path: str, schema: StructType,
                 fmt: str = "parquet") -> DataFrame:
@@ -48,7 +50,7 @@ def drain_available_now(df: DataFrame, timeout_sec: float = 300) -> DataFrame:
       result is aggregate-sized (driver-safe by the same argument as the
       list/table formats);
     - non-aggregating plans reject ``complete``, so they append to a
-      DISTRIBUTED parquet spill; the result is localCheckpoint-ed onto
+      DISTRIBUTED parquet spill; the result is a checkpoint stage on
       executor block storage (still off the driver — row-count-unbounded
       extracts never collect) so the request-scoped spill directory can
       be deleted before returning instead of leaking per request.
@@ -104,12 +106,12 @@ def drain_available_now(df: DataFrame, timeout_sec: float = 300) -> DataFrame:
             if not any(f.endswith(".parquet")
                        for f in _os.listdir(spill)):
                 return spark.createDataFrame([], df.schema)
-            # eager localCheckpoint: partitions move to executor
-            # block storage (distributed, NOT a driver collect) and
-            # the lineage to the spill files is cut — the temp dir
-            # is then removable in the finally below
-            return (spark.read.schema(df.schema).parquet(spill)
-                    .localCheckpoint(eager=True))
+            # a checkpoint stage: partitions move to executor block
+            # storage (distributed, NOT a driver collect) and the
+            # lineage to the spill files is cut — the temp dir is
+            # then removable in the finally below
+            return stage(spark.read.schema(df.schema).parquet(spill),
+                         "checkpoint")
         finally:
             shutil.rmtree(spill, ignore_errors=True)
             shutil.rmtree(ckpt2, ignore_errors=True)

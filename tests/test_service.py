@@ -838,16 +838,35 @@ def test_streaming_view_cube_with_row_cap(spark, sf_dir, tmp_path):
         spark.catalog.dropTempView("events_batch_cube")
 
 
+def _stage_dirs() -> set:
+    """Scope directories under this process's stage root."""
+    import os
+
+    from activedata_etl_spark.staging import _process_root
+
+    root = _process_root()
+    return {d for d in os.listdir(root) if d.startswith("scope_")}
+
+
+def _graft_tmp_dirs() -> set:
+    import os
+    import tempfile
+
+    return {d for d in os.listdir(tempfile.gettempdir())
+            if d.startswith("spark_graft_")}
+
+
 def test_request_scoped_caches_released(endpoint, spark):
-    """Operators that persist intermediates (LSH, prefix-filter, cosine
+    """Operators that stage intermediates (LSH, prefix-filter, cosine
     dedup) are reachable per-request over HTTP; the service must
-    release every cache a request created once the response is written,
-    or a long-lived service accumulates CacheManager entries forever."""
+    release every cache and stage directory a request created once the
+    response is written, or a long-lived service accumulates
+    CacheManager entries and scratch parquet forever."""
     def n_cached():
         m = spark.sparkContext._jsc.getPersistentRDDs()
         return len({int(k) for k in m.keySet().toArray()})
 
-    before = n_cached()
+    before, dirs = n_cached(), _stage_dirs()
     out = _post(endpoint + "/query", {
         "from": {"op": "near_dup_pairs", "table": "documents",
                  "threshold": 0.5},
@@ -858,13 +877,14 @@ def test_request_scoped_caches_released(endpoint, spark):
                  "threshold": 0.5},
         "limit": 5, "format": "table"})
     assert "data" in out
-    # the client sees the body before the server's finally runs — poll
+    # the client sees the body before the server's scope closes — poll
     import time
     for _ in range(50):
-        if n_cached() <= before:
+        if n_cached() <= before and _stage_dirs() <= dirs:
             break
         time.sleep(0.1)
     assert n_cached() <= before
+    assert _stage_dirs() <= dirs
 
 
 def test_explain_on_streaming_view_executes_nothing(spark, sf_dir,
@@ -909,20 +929,28 @@ def test_explain_on_streaming_view_executes_nothing(spark, sf_dir,
 
 def test_explain_on_prefix_op_is_plan_only(endpoint, spark):
     """format=explain on an eagerly-materializing extension op must
-    return the REAL (lazy) plan without executing the pairwise join:
-    before the plan_only fix, _materialize_release ran the full join at
-    DataFrame-construction time and the reported plan degraded to an
-    opaque localCheckpoint scan (r7 ADVICE #2)."""
+    return the REAL (lazy) plan without executing anything: no Spark
+    job, no stage directory, no persist mark left behind, and not an
+    opaque checkpoint scan in place of the join plan."""
     def n_cached():
         m = spark.sparkContext._jsc.getPersistentRDDs()
         return len({int(k) for k in m.keySet().toArray()})
 
-    before = n_cached()
+    def ungrouped_jobs() -> set:
+        # the handler thread runs its jobs outside any job group
+        return set(spark.sparkContext.statusTracker()
+                   .getJobIdsForGroup(None))
+
+    before, dirs, tmp = n_cached(), _stage_dirs(), _graft_tmp_dirs()
+    last_job = max(ungrouped_jobs(), default=-1)
     out = _post(endpoint + "/query", {
         "from": {"op": "prefix_filter_pairs", "table": "documents",
                  "threshold": 0.5},
         "format": "explain"})
     plan = out["explain"]
+    assert [j for j in ungrouped_jobs() if j > last_job] == []
+    assert _stage_dirs() <= dirs
+    assert _graft_tmp_dirs() <= tmp
     # the checkpoint scan shows up as "Scan ExistingRDD"; the real plan
     # shows the join/aggregate pipeline instead
     assert "ExistingRDD" not in plan
