@@ -398,10 +398,22 @@ def test_delta_queries_partition_prune_batch_dirs(spark, sf_dir):
     assert "PartitionFilters" in plan and "batch" in plan
     assert "(batch" in plan.split("PartitionFilters", 1)[1][:200] \
         or "batch =" in plan or "batch#" in plan
-    plan = _plan(spark, sf_dir, "agg_cms_delta_heavy_hitters")
+    df = QUERIES["agg_cms_delta_heavy_hitters"](spark, sf_dir)
     # the register read names only the batch=1 directory: a one-shard
-    # scan (path-pruned before planning, stronger than a runtime filter)
-    assert "batch=1" in plan
+    # scan (path-pruned before planning, stronger than a runtime filter).
+    # Read from the scan's file index, not the plan text, which cuts
+    # Location strings at spark.sql.maxMetadataStringLength.
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            paths = leaf.relation().location().rootPaths()
+            roots.append([paths.apply(j).toString()
+                          for j in range(paths.size())])
+    regs = [r for r in roots if any("cms_delta" in p for p in r)]
+    assert len(regs) == 1, roots
+    assert len(regs[0]) == 1 and regs[0][0].endswith("/batch=1"), regs
 
 
 def test_bottomk_global_takes_ordered(spark, sf_dir):
